@@ -52,41 +52,44 @@ def main() -> None:
     spark.range(64).repartition(32).select(_warm("id")).write.mode(
         "overwrite"
     ).format("noop").save()
-    # streaming-engine warmup (r10): the first streaming query in a
-    # session pays ~2.3 s of one-time StreamExecution/state-store
-    # class loading + codegen (measured: rate-source warm query 2.4 s,
-    # after which a real entry's query start is ~0.4 s) — without
-    # this, whichever stream_* entry the registry rotation puts first
-    # absorbs that machinery cost into its timing. A 1-row rate-source
-    # stateful query touches the same engine paths and no entry data.
+    # streaming-engine warmup: the first streaming query in a session
+    # pays ~2.3 s of one-time StreamExecution/state-store class loading
+    # + codegen (measured: rate-source warm query 2.4 s, after which a
+    # real entry's query start is ~0.4 s) — without this, whichever
+    # stream_* entry runs first absorbs that machinery cost into its
+    # timing. A 1-row rate-source stateful query touches the same
+    # engine paths and no entry data; it is timed and reported as the
+    # "_stream_engine" warmup row.
     import uuid as _uuid
 
+    warmup: dict[str, float] = {}
+    t0 = time.perf_counter()
+    _wname = f"warm_stream_{_uuid.uuid4().hex[:6]}"
     _wq = (
         spark.readStream.format("rate").option("numPartitions", 1).load()
         .dropDuplicates(["value"])
         .writeStream.format("memory")
-        .queryName(f"warm_stream_{_uuid.uuid4().hex[:6]}")
+        .queryName(_wname)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     _wq.awaitTermination(120)
+    warmup["_stream_engine"] = round(time.perf_counter() - t0, 3)
+    spark.catalog.dropTempView(_wname)
 
     # Shared-artifact warmup (VERDICT r8 #2 / Next #4): several entry
     # families consume one-time memoized artifacts (suite.common.memo_df
     # tables: shingle index, embedding norms, IVF/semantic assignment,
     # PQ codes, graph edge index; the persisted bucketed term index;
-    # the incremental-view base state). The registry window rotation
-    # reorders the suite every round, so without a warmup the build
-    # cost lands on whichever family entry happens to run first —
-    # making round-over-round per-entry comparisons noise. Build them
-    # HERE, untimed-per-entry but reported as separate named rows, so
-    # the timed loop below measures warm plans regardless of registry
-    # order. Opt out with SPARK_GRAFT_BENCH_NO_WARMUP=1. A targeted
-    # probe (SPARK_GRAFT_BENCH_ONLY) warms only the owners it will
-    # time — paying all 15 owners at a 100x-class SF to probe one
-    # entry made targeted large-SF runs impractical.
-    warmup: dict[str, float] = {}
+    # the incremental-view base state). Without a warmup the build cost
+    # lands on whichever family entry happens to run first, so they are
+    # built HERE, untimed-per-entry but reported as separate named
+    # rows: the list exists only to keep shared-artifact builds out of
+    # the per-entry figures. Opt out with SPARK_GRAFT_BENCH_NO_WARMUP=1.
+    # A targeted probe (SPARK_GRAFT_BENCH_ONLY) warms only the owners
+    # it will time — paying all 16 owners at a 100x-class SF to probe
+    # one entry made targeted large-SF runs impractical.
     _only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     _only_set = (
         {n.strip() for n in _only_env.split(",") if n.strip()}
@@ -179,9 +182,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # one-time shared-artifact build costs, kept OUT of the
-        # per-entry figures and the headline value so both stay
-        # comparable across registry rotations (VERDICT r8 Next #4)
+        # one-time engine and shared-artifact build costs, kept OUT of
+        # the per-entry figures and the headline value (VERDICT r8
+        # Next #4)
         "warmup": warmup,
         "warmup_sec": warmup_sec,
         # co-headline (VERDICT r9 Next #2): value + warmup as a

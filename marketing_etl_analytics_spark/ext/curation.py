@@ -11,8 +11,6 @@ corpus builds, idempotent reruns.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -25,9 +23,7 @@ from pyspark.sql import functions as F
 # bound (k ~ 1e5 regimes: 8192 centers x 64 dims x 8 B = 4 MB closure
 # is the comfort ceiling) the code falls back to the frame-only
 # broadcast-join shape, which never collects centers to the driver.
-ARROW_CENTERS_MAX = int(
-    os.environ.get("SPARK_GRAFT_ARROW_CENTERS_MAX", "8192")
-)
+ARROW_CENTERS_MAX = 8192
 
 
 # --- model-based quality scoring ---------------------------------------------

@@ -156,10 +156,7 @@ def get_spark(
         # missing temp_shuffle files (observed at sf100b). 480 s rides
         # out worst-case pauses; on a real cluster the same setting is
         # standard practice for straggler-tolerant long jobs.
-        .config(
-            "spark.network.timeout",
-            os.environ.get("SPARK_GRAFT_NETWORK_TIMEOUT", "480s"),
-        )
+        .config("spark.network.timeout", "480s")
         # Shuffle/spill compression codec (Spark default lz4). zstd
         # roughly halves spill volume for the shingle-pair-heavy dedup
         # entries at 100x-class SFs, where local disk — not CPU — is

@@ -304,40 +304,48 @@ def test_domain_balance_broadcasts_cap(spark):
 
 
 def test_countmin_counters_from_vocab_not_corpus(spark):
-    """The d-fold expansion must sit ABOVE the token-frequency
-    aggregate (|vocab| rows), not on the raw token stream — the
-    Generate(explode(sequence...)) operator consumes the aggregated
-    side."""
+    """The d-fold expansion must consume the token-frequency table
+    (|vocab| rows), not the raw token stream. The frequency table is
+    checkpointed because it feeds two consumers (counter build and
+    top-k probes), so the invariant is read off the final plan: every
+    Generate emitting ``j`` (the folded 0..d-1 sequence) reads only the
+    checkpoint scan, that scan holds exactly |vocab| rows, and no
+    Generate anywhere re-tokenizes the corpus (split(lower(text)))."""
     import re
 
+    from pyspark.sql import functions as F
+
+    from marketing_etl_analytics_spark.suite.common import t
     from marketing_etl_analytics_spark.suite.timeseries import ext_sketch_countmin
 
-    df = ext_sketch_countmin(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    # formatted-plan operator ids increase bottom-up. The token explode
-    # (Generate over split(text)) must have a LOWER id than some
-    # HashAggregate which in turn is lower than the d-row explode
-    # (Generate emitting [j#...], the folded 0..3 sequence) — i.e. the
-    # frequency aggregate sits between the two explodes.
-    tok_gen, j_gen, aggs = None, None, []
-    op = None
-    for l in plan.splitlines():
-        m = re.match(r"\((\d+)\) (\w+)", l.strip())
-        if m:
-            op = (int(m.group(1)), m.group(2))
-            if op[1] == "HashAggregate":
-                aggs.append(op[0])
-            continue
-        if op and op[1] == "Generate" and l.strip().startswith("Arguments:"):
-            if "split(lower(text" in l:
-                tok_gen = op[0] if tok_gen is None else tok_gen
-            if re.search(r"\[j#\d+\]", l):
-                j_gen = op[0] if j_gen is None else j_gen
-    assert tok_gen is not None and j_gen is not None, plan
-    assert any(tok_gen < a < j_gen for a in aggs), (tok_gen, aggs, j_gen)
+    def nodes(n):
+        yield n
+        kids = n.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    plan = ext_sketch_countmin(spark, SF_DIR)._jdf.queryExecution().sparkPlan()
+    gens = [n for n in nodes(plan) if n.nodeName() == "Generate"]
+    tok_gens = [g for g in gens if "split(lower(text" in g.generator().toString()]
+    assert not tok_gens, plan.toString()
+    j_gens = [
+        g for g in gens
+        if re.fullmatch(r"List\(j#\d+\)", g.generatorOutput().toString())
+    ]
+    assert j_gens, plan.toString()
+
+    vocab = (
+        t(spark, SF_DIR, "documents")
+        .select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .distinct()
+        .count()
+    )
+    for g in j_gens:
+        leaves = [n for n in nodes(g) if n.children().isEmpty()]
+        assert [n.nodeName() for n in leaves] == ["Scan ExistingRDD"], g.toString()
+        scan_rows = leaves[0].rdd().count()
+        assert scan_rows == vocab, (scan_rows, vocab)
 
 
 def test_quality_score_scan_prunes_to_three_columns(spark):
