@@ -1,4 +1,5 @@
-"""Streaming operators over the events table.
+"""Streaming operators over the events table, and the one runner every
+bounded stream goes through.
 
 Batch/stream equivalence contract: ``daily_event_aggregates`` over a
 bounded stream (``trigger(availableNow=True)``) must produce exactly
@@ -8,83 +9,140 @@ test suite asserts this.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-# schema of events.parquet with nanos ts read as long (see suite.common.events)
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
+from marketing_etl_analytics_spark.functions.dates import (
+    event_time,
+    pin_event_time_conf,
 )
+
+# longest a bounded stream may run before run_bounded_stream stops it
+STREAM_TIMEOUT_S = 300
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (bounded; use
-    availableNow trigger for batch-equivalence runs).
+    """File-source stream over the events parquet (bounded; run it with
+    ``run_bounded_stream``), under the same event-time rule as the
+    batch reader ``suite.common.events``."""
+    pin_event_time_conf(spark)
+    return event_time(read_table_stream(spark, sf_dir, "events"))
 
-    The parquet file source requires a *directory*, so the single
-    events.parquet file is exposed via a symlink inside a temp dir.
+
+def _state_partitions(spark: SparkSession, path: str) -> int:
+    """Size the state-store count of a stream from its source bytes,
+    the way Spark sizes scan partitions from file bytes.
+
+    Each shuffle partition of a stateful operator is one state-store
+    instance paying a fixed commit (delta file + snapshot bookkeeping)
+    per micro-batch, so over-partitioning a small stream is pure
+    overhead — measured here: the stream-stream join at sf0.1 (2 MB of
+    events) runs 2.7 s with 8 stores vs 6.5-9.7 s with 32 for identical
+    output. Rule: one store per ~256 KB of source parquet, clamped to
+    [4, defaultParallelism]; a cluster-scale stream hits the
+    parallelism cap.
     """
-    import hashlib
     import os
+
+    try:
+        nbytes = (
+            os.path.getsize(path)
+            if os.path.isfile(path)
+            else sum(
+                os.path.getsize(os.path.join(path, f))
+                for f in os.listdir(path)
+                if f.endswith(".parquet")
+            )
+        )
+    except OSError:
+        nbytes = 0
+    cap = spark.sparkContext.defaultParallelism
+    return max(4, min(cap, nbytes // (256 * 1024) or 4))
+
+
+def run_bounded_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    stream: DataFrame | Callable[[str], StreamingQuery],
+    result: Callable[[str], DataFrame] | None = None,
+) -> DataFrame:
+    """Run one bounded stream over ``table`` to completion and return
+    its output.
+
+    Two sink shapes:
+
+    - ``result is None``: ``stream`` is a streaming DataFrame. It runs
+      into a memory sink under the availableNow trigger and its rows
+      come back; the sink's temp view is dropped, the returned
+      DataFrame keeps the rows.
+    - otherwise ``stream(scratch)`` starts a foreachBatch sink that
+      writes under the fresh directory ``scratch`` (the builders in
+      ``streaming.sinks`` start under availableNow); ``result(scratch)``
+      reads what it wrote, materialized before ``scratch`` is removed.
+
+    For the run, ``spark.sql.shuffle.partitions`` (the state-store
+    count) is sized from the bytes of ``table``; the caller's value is
+    restored afterwards. A stream still running after
+    ``STREAM_TIMEOUT_S`` is stopped and raises ``TimeoutError`` rather
+    than returning a partial result.
+    """
+    import os
+    import shutil
     import tempfile
+    import uuid
 
-    # abspath: a relative sf_dir would otherwise produce a symlink whose
-    # relative target resolves against /tmp — a broken link the parquet
-    # stream source reads as an EMPTY directory (0 rows, no error)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    if os.path.isdir(src):
-        # already a directory of part files (Spark-written layout) —
-        # stream straight from it; a nested symlink would be invisible
-        # to the file source (non-partition subdirs are not recursed)
-        stage = src
-    else:
-        tag = hashlib.md5(src.encode()).hexdigest()[:8]
-        stage = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, "events.parquet")
-        if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(
-            src
-        ):
-            os.remove(link)  # stale/broken link from an earlier process
-        if not os.path.lexists(link):
-            os.symlink(src, link)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the file stream source needs an explicit schema; the physical ts
-    # type varies by writer (driver testdata: INT64 nanos -> long under
-    # nanosAsLong; Spark-written copies: INT96/INT64 timestamps), so
-    # probe it with a batch footer read and adapt like suite.common.events
-    ts_type = dict(spark.read.parquet(stage).dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).format("parquet").load(stage)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    schema = StructType(
-        [
-            f if f.name != "ts" else StructField("ts", TimestampType())
-            for f in EVENTS_RAW_SCHEMA.fields
-        ]
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(_state_partitions(spark, path))
     )
-    return spark.readStream.schema(schema).format("parquet").load(stage)
+    scratch = None
+    try:
+        if result is None:
+            name = f"{table}_stream_{uuid.uuid4().hex[:8]}"
+            _await(
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            out = spark.table(name)
+            spark.catalog.dropTempView(name)
+            return out
+        scratch = tempfile.mkdtemp(prefix=f"{table}_stream_")
+        _await(stream(scratch))
+        return result(scratch).localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if scratch is not None:
+            shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _await(q: StreamingQuery) -> None:
+    """Wait for a bounded query; never leave it running."""
+    try:
+        if not q.awaitTermination(STREAM_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not finish within "
+                f"{STREAM_TIMEOUT_S} s and was stopped"
+            )
+    finally:
+        q.stop()
 
 
 def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -391,15 +449,24 @@ def session_window_agg(
 
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over any driver testdata parquet (bounded;
-    availableNow for batch-equivalence runs). Same symlink staging as
-    ``read_events_stream`` — the parquet stream source needs a
-    directory — with the schema probed from a batch footer read."""
+    run it with ``run_bounded_stream``), with the schema probed from a
+    batch footer read.
+
+    The parquet file source requires a *directory*, so a single-file
+    table is exposed via a symlink inside a temp dir.
+    """
     import hashlib
     import os
     import tempfile
 
+    # abspath: a relative sf_dir would otherwise produce a symlink whose
+    # relative target resolves against /tmp — a broken link the parquet
+    # stream source reads as an EMPTY directory (0 rows, no error)
     src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     if os.path.isdir(src):
+        # already a directory of part files (Spark-written layout) —
+        # stream straight from it; a nested symlink would be invisible
+        # to the file source (non-partition subdirs are not recursed)
         stage = src
     else:
         tag = hashlib.md5(src.encode()).hexdigest()[:8]
@@ -407,7 +474,7 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         os.makedirs(stage, exist_ok=True)
         link = os.path.join(stage, f"{name}.parquet")
         if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(src):
-            os.remove(link)
+            os.remove(link)  # stale/broken link from an earlier process
         if not os.path.lexists(link):
             os.symlink(src, link)
     schema = spark.read.parquet(stage).schema

@@ -15,9 +15,29 @@ so a micro-batch touching recent keys rewrites recent files only;
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 from marketing_etl_analytics_spark.sources import acid
+
+
+def start_foreach_batch(
+    stream_df: DataFrame,
+    output_mode: str,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``batch_fn`` over ``stream_df`` as a bounded (availableNow)
+    foreachBatch query checkpointed at ``checkpoint_dir``."""
+    return (
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_merge_sink(
@@ -25,13 +45,10 @@ def stream_merge_sink(
     table_path: str,
     key_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start a streaming query that MERGEs each micro-batch into the
-    versioned table at ``table_path`` (created on first batch).
-
-    Returns the StreamingQuery; callers typically
-    ``.awaitTermination()`` (availableNow) or manage it themselves.
+    """Start a bounded (availableNow) streaming query that MERGEs each
+    micro-batch into the versioned table at ``table_path`` (created on
+    first batch). Returns the StreamingQuery.
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -44,14 +61,7 @@ def stream_merge_sink(
             return
         acid.merge(spark, table_path, batch_df, key_cols)
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, "update", merge_batch, checkpoint_dir)
 
 
 def cdc_apply_sink(
@@ -60,7 +70,6 @@ def cdc_apply_sink(
     key_cols: list[str],
     order_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Apply a CDC feed to a versioned table with LAST-WRITE-WINS
     semantics under arbitrary micro-batch ordering.
@@ -125,14 +134,7 @@ def cdc_apply_sink(
         merged = winners(touched.unionByName(bw))
         acid.merge(spark, table_path, merged, key_cols)
 
-    writer = (
-        change_stream.writeStream.outputMode("update")
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(change_stream, "update", apply_batch, checkpoint_dir)
 
 
 def dedup_ingest_sink(
@@ -140,7 +142,6 @@ def dedup_ingest_sink(
     index_dir: str,
     decisions_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     cap_buckets: bool = False,
     compact_index: bool = False,
 ):
@@ -363,11 +364,9 @@ def dedup_ingest_sink(
             os.path.join(index_dir, this_sub)
         )
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(ingest_batch_compact if compact_index else ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        doc_stream,
+        "append",
+        ingest_batch_compact if compact_index else ingest_batch,
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

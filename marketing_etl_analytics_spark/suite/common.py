@@ -29,6 +29,11 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.functions.dates import (
+    event_time,
+    pin_event_time_conf,
+)
+
 # --- table access -----------------------------------------------------------
 
 # Single-row-group testdata accommodation: quarantined in
@@ -66,42 +71,15 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects. Read nanos as long (legacy conf, runtime-settable)
-    and rebuild a micro-precision timestamp — same truncation DuckDB
-    applies when it reads nanos into its micro-precision TIMESTAMP."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # timestamp day-boundaries (F.window, date_trunc) follow the
-    # session TZ, but the DuckDB oracle's timestamps are naive —
-    # pin UTC so the comparison holds under ANY host session
-    # (get_spark already sets this; the driver's own session may not)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """events.parquet under the shared event-time rule
+    (``functions.dates.event_time``), the rule the stream reader
+    ``streaming.read_events_stream`` applies too."""
+    pin_event_time_conf(spark)
     key = (spark.sparkContext.applicationId, sf_dir, "events")
     if _cache_on() and key in _TABLE_CACHE:
         return _TABLE_CACHE[key]
     path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        # nanos-as-long (TIMESTAMP(NANOS) testdata): rebuild micro-
-        # precision timestamps with integer DIV, not `/` — float division
-        # of an int64 nanos value loses low-order microseconds
-        out = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # naive micros parquet (isAdjustedToUTC=false), which Spark 4
-        # infers as TIMESTAMP_NTZ — but unix_micros/window/watermark
-        # want TIMESTAMP. Under the UTC session TZ pinned above the
-        # NTZ->LTZ cast is value-identical to DuckDB's naive read.
-        # Explicit TimestampType(): the "timestamp" DDL keyword resolves
-        # via spark.sql.timestampType, so a host session configured for
-        # TIMESTAMP_NTZ would make the cast a silent no-op.
-        from pyspark.sql.types import TimestampType
-
-        out = raw.withColumn("ts", F.col("ts").cast(TimestampType()))
-    else:
-        # already micro-precision TIMESTAMP
-        out = raw
-    out = maybe_spread(out, path)
+    out = maybe_spread(event_time(spark.read.parquet(path)), path)
     if _cache_on():
         out = out.persist()
         _TABLE_CACHE[key] = out

@@ -1479,41 +1479,31 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — the invariant the oracle (batch HLL over the full feed)
     verifies exactly. Graded via the stream_sketch_suite merged row
     (r6 consolidation; r4-green as a single, body unchanged)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
     )
+    from marketing_etl_analytics_spark.streaming.sinks import start_foreach_batch
 
-    base = tempfile.mkdtemp(prefix=f"hll_stream_{uuid.uuid4().hex[:8]}_")
-    reg_dir = f"{base}/registers"
+    users = read_events_stream(spark, sf_dir).select("user_id")
 
-    def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(_hll_hv().alias("hv"))
-            .distinct()
-            .select(*_hll_rank_expr())
-            .groupBy("idx")
-            .agg(F.max("rank").alias("m"))
-            .write.mode("append")
-            .parquet(reg_dir)
-        )
+    def start(base: str):
+        def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.select(_hll_hv().alias("hv"))
+                .distinct()
+                .select(*_hll_rank_expr())
+                .groupBy("idx")
+                .agg(F.max("rank").alias("m"))
+                .write.mode("append")
+                .parquet(f"{base}/registers")
+            )
 
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .select("user_id")
-            .writeStream.outputMode("append")
-            .foreachBatch(batch_registers)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        return start_foreach_batch(users, "append", batch_registers, f"{base}/ckpt")
+
+    def result(base: str) -> DataFrame:
         merged = (
-            spark.read.parquet(reg_dir)
+            spark.read.parquet(f"{base}/registers")
             .groupBy("idx")
             .agg(F.max("m").alias("m"))
             .select(F.lit("(all)").alias("grp"), "idx", "m")
@@ -1521,15 +1511,13 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex = t(spark, sf_dir, "events").agg(
             F.countDistinct("user_id").cast("long").alias("n_exact")
         )
-        out = (
+        return (
             _hll_finish(merged)
             .crossJoin(F.broadcast(ex))
             .select("grp", "n_exact", "hll_estimate", "n_zero_registers")
-            .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+
+    return run_bounded_stream(spark, sf_dir, "events", start, result)
 
 
 # --- rolling median (windowed order statistics) ------------------------------
@@ -1722,16 +1710,13 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 users; the oracle is the batch sketch over the full feed.
     Graded via the stream_sketch_suite merged row (r6 consolidation;
     r4-green as a single, body unchanged)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
     )
+    from marketing_etl_analytics_spark.streaming.sinks import start_foreach_batch
 
-    base = tempfile.mkdtemp(prefix=f"cm_stream_{uuid.uuid4().hex[:8]}_")
-    cnt_dir = f"{base}/counters"
+    users = read_events_stream(spark, sf_dir).select("user_id")
     bucket = (
         F.conv(
             F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col("v"))), 1, 12),
@@ -1741,42 +1726,33 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         % CM_W
     )
 
-    def batch_counters(batch_df: DataFrame, batch_id: int) -> None:
-        # sum-merge is NOT replay-idempotent and foreachBatch is
-        # at-least-once, so the partial counters land in a
-        # batchId-keyed subdir with OVERWRITE: a replayed batch
-        # rewrites its own subdir instead of double-counting
-        import os as _os
-
-        (
-            batch_df.select(F.col("user_id").cast("string").alias("v"))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                "v", "n",
-                F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j"),
+    def start(base: str):
+        def batch_counters(batch_df: DataFrame, batch_id: int) -> None:
+            # sum-merge is NOT replay-idempotent and foreachBatch is
+            # at-least-once, so the partial counters land in a
+            # batchId-keyed subdir with OVERWRITE: a replayed batch
+            # rewrites its own subdir instead of double-counting
+            (
+                batch_df.select(F.col("user_id").cast("string").alias("v"))
+                .groupBy("v")
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
+                .select(
+                    "v", "n",
+                    F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j"),
+                )
+                .withColumn("bucket", bucket)
+                .groupBy("j", "bucket")
+                .agg(F.sum("n").alias("c"))
+                .write.mode("overwrite")
+                .parquet(f"{base}/counters/b{batch_id:06d}")
             )
-            .withColumn("bucket", bucket)
-            .groupBy("j", "bucket")
-            .agg(F.sum("n").alias("c"))
-            .write.mode("overwrite")
-            .parquet(_os.path.join(cnt_dir, f"b{batch_id:06d}"))
-        )
 
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .select("user_id")
-            .writeStream.outputMode("append")
-            .foreachBatch(batch_counters)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        return start_foreach_batch(users, "append", batch_counters, f"{base}/ckpt")
+
+    def result(base: str) -> DataFrame:
         counters = (
             spark.read.option("recursiveFileLookup", "true")
-            .parquet(cnt_dir)
+            .parquet(f"{base}/counters")
             .groupBy("j", "bucket")
             .agg(F.sum("c").alias("c"))
         )
@@ -1791,7 +1767,7 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes = top.select(
             "v", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
         ).withColumn("bucket", bucket)
-        out = (
+        return (
             probes.join(counters, ["j", "bucket"])
             .groupBy("v", "n")
             .agg(F.min("c").cast("long").alias("cm_estimate"))
@@ -1802,11 +1778,9 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("cm_estimate") - F.col("n")).cast("long").alias("overestimate"),
             )
             .orderBy(F.desc("n_exact"), "user_key")
-            .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+
+    return run_bounded_stream(spark, sf_dir, "events", start, result)
 
 
 # --- merged streaming-sketch row (r6 consolidation) ---------------------------

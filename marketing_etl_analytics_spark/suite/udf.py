@@ -17,6 +17,11 @@ can't express natively. Graded here:
   the weaker rows-only check, as the contract allows for custom
   stateful streaming).
 
+Every ``stream_*`` entry here (and the streaming sketches in
+``suite.timeseries``) runs its bounded stream through
+``streaming.events_stream.run_bounded_stream``, which sizes the state
+stores from the input, waits with a timeout and cleans up its sink.
+
 Scale notes: pandas UDFs move data Python-side in Arrow batches —
 10-100x over row-at-a-time UDFs but still the slow path vs codegen;
 they are for semantics builtins can't express. applyInPandas shuffles
@@ -33,39 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from marketing_etl_analytics_spark.suite.common import t
-from marketing_etl_analytics_spark.suite.registry import SUITE, SuiteEntry, register
-
-
-def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size the state-store count for a streaming entry from the input
-    volume, the way Spark sizes scan partitions from file bytes.
-
-    Each shuffle partition of a stateful operator is one state-store
-    instance paying a fixed commit (delta file + snapshot bookkeeping)
-    per micro-batch, so over-partitioning a small stream is pure
-    overhead — measured here: the stream-stream join at sf0.1 (2 MB of
-    events) runs 2.7 s with 8 stores vs 6.5-9.7 s with 32 for identical
-    output. Rule: one store per ~256 KB of source parquet, clamped to
-    [4, defaultParallelism]; a cluster-scale stream hits the
-    parallelism cap and behaves exactly as before.
-    """
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        nbytes = (
-            os.path.getsize(src)
-            if os.path.isfile(src)
-            else sum(
-                os.path.getsize(os.path.join(src, f))
-                for f in os.listdir(src)
-                if f.endswith(".parquet")
-            )
-        )
-    except OSError:
-        nbytes = 0
-    cap = spark.sparkContext.defaultParallelism
-    return max(4, min(cap, nbytes // (256 * 1024) or 4))
+from marketing_etl_analytics_spark.suite.ext import (
+    _SQL_BAND_SIG,
+    _SQL_MH_MINS,
+    MH_PRIME,
+    N_BANDS,
+    SQL_SHINGLES,
+)
+from marketing_etl_analytics_spark.suite.registry import register
 
 
 # --- vectorized scalar pandas UDF -------------------------------------------
@@ -166,32 +146,14 @@ def rel_pandas_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deduped stream count must equal the batch COUNT(DISTINCT).",
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         dedup_events,
         read_events_stream,
+        run_bounded_stream,
     )
 
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            dedup_events(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).agg(
+    deduped = dedup_events(read_events_stream(spark, sf_dir))
+    return run_bounded_stream(spark, sf_dir, "events", deduped).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("event_id").alias("n_distinct"),
     )
@@ -208,35 +170,14 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is ext_sessionize.",
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
         sessionize,
     )
 
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    # one state store per shuffle partition: right-size for the host
-    # session (a driver-default 200 would mean 200 stores for ~10^5
-    # rows), then restore the caller's setting
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            sessionize(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    sessions = sessionize(read_events_stream(spark, sf_dir))
+    return run_bounded_stream(spark, sf_dir, "events", sessions)
 
 
 # --- Structured Streaming stream-static enrichment join ----------------------
@@ -259,29 +200,20 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the sink; the returned aggregate must equal the batch join.",
 )
 def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
     )
+    from marketing_etl_analytics_spark.suite.common import money
 
     dim = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
+    enriched = (
         read_events_stream(spark, sf_dir)
         .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "value", "c_nationkey")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    from marketing_etl_analytics_spark.suite.common import money
-
     return (
-        spark.table(name)
+        run_bounded_stream(spark, sf_dir, "events", enriched)
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -330,32 +262,16 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark has provably closed — the oracle mirrors that rule.",
 )
 def stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         attribution_join_outer,
         read_events_stream,
+        run_bounded_stream,
     )
 
-    name = f"attrib_outer_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
+    joined = attribution_join_outer(read_events_stream(spark, sf_dir))
+    return run_bounded_stream(spark, sf_dir, "events", joined).orderBy(
+        "click_id", "view_id"
     )
-    try:
-        q = (
-            attribution_join_outer(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).orderBy("click_id", "view_id")
 
 
 # --- Arrow-native mapInArrow -------------------------------------------------
@@ -562,37 +478,19 @@ def rel_udf_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evicted at emission — bounded by the watermark horizon.",
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
         session_window_agg,
     )
 
-    name = f"sess_win_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            session_window_agg(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    sessions = session_window_agg(read_events_stream(spark, sf_dir))
     ev = t(spark, sf_dir, "events")
     bounds = ev.agg(
         (F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("wm")
     )
     return (
-        spark.table(name)
+        run_bounded_stream(spark, sf_dir, "events", sessions)
         .crossJoin(F.broadcast(bounds))
         .filter(F.col("session_end") < F.col("wm"))
         .select("user_id", "session_start", "session_end", "n_events", "total_value")
@@ -629,38 +527,29 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is the batch argmax per key over the full feed.",
 )
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from marketing_etl_analytics_spark.sources import acid
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
     )
     from marketing_etl_analytics_spark.streaming.sinks import cdc_apply_sink
 
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"cdc_apply_{run}_")
-    table = f"{base}/table"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
+    feed = read_events_stream(spark, sf_dir).select(
+        "user_id", "event_id", "ts", "event_type", "value"
     )
-    try:
-        feed = read_events_stream(spark, sf_dir).select(
-            "user_id", "event_id", "ts", "event_type", "value"
-        )
-        q = cdc_apply_sink(
+
+    def start(base: str):
+        return cdc_apply_sink(
             feed,
-            table,
+            f"{base}/table",
             key_cols=["user_id"],
             order_cols=["ts", "event_id"],
             checkpoint_dir=f"{base}/ckpt",
         )
-        q.awaitTermination(300)
-        out = (
-            acid.read(spark, table)
+
+    def result(base: str) -> DataFrame:
+        return (
+            acid.read(spark, f"{base}/table")
             .filter(F.col("event_type") != "error")  # tombstones out
             .select(
                 "user_id",
@@ -669,12 +558,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("value").cast("decimal(18,2)").cast("double").alias("last_value"),
             )
             .orderBy("user_id")
-            .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+
+    return run_bounded_stream(spark, sf_dir, "events", start, result)
 
 
 # --- Structured Streaming windowed top-k trending ----------------------------
@@ -718,37 +604,21 @@ _TREND_K = 3
     "state is one count per (window, type), bounded by the watermark.",
 )
 def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
+        run_bounded_stream,
     )
 
-    name = f"trend_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
+    counts = (
+        read_events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     ev = t(spark, sf_dir, "events")
     bounds = ev.agg((F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("wm"))
     closed = (
-        spark.table(name)
+        run_bounded_stream(spark, sf_dir, "events", counts)
         .crossJoin(F.broadcast(bounds))
         .filter(F.col("w.end") < F.col("wm"))
     )
@@ -770,68 +640,9 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Structured Streaming continuous dedup ingest ----------------------------
 
-@register(
-    "stream_dedup_ingest",
-    None,  # oracle assembled below (needs ext.py's SQL fragments)
-    doc="Continuous dedup ingest: the document feed streams in, each "
-    "micro-batch computes its MinHash band signatures "
-    "(suite.ext.minhash_signatures_frame/minhash_bands_frame — the "
-    "same pipeline the standing index persists), appends them to the "
-    "accumulating signature index, and flags every arriving doc "
-    "against ALL docs that ARRIVED before it (standing index "
-    "regardless of id, plus earlier-in-batch by doc_id) — so no "
-    "clone pair is ever lost to a batch split: the late-arriving "
-    "side is flagged even when it carries the smaller id (pinned by "
-    "the out-of-order pytest). Under an id-ordered feed — this "
-    "entry's single availableNow batch included — the decision set "
-    "equals the id-ordered batch oracle exactly. "
-    "The ingest join is asymmetric "
-    "(batch x index), so per-batch cost scales with the delta. "
-    "Bucket caps deliberately live in the STANDING dedup entries "
-    "(corpus-global statistics); composing cap_lsh_buckets onto the "
-    "index here gives decisions-at-time semantics at scale.",
-)
-def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_table_stream,
-    )
-    from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
-
-    base = tempfile.mkdtemp(prefix=f"dedup_ingest_{uuid.uuid4().hex[:8]}_")
-    dec_dir = f"{base}/decisions"
-    try:
-        q = dedup_ingest_sink(
-            read_table_stream(spark, sf_dir, "documents"),
-            index_dir=f"{base}/index",
-            decisions_dir=dec_dir,
-            checkpoint_dir=f"{base}/ckpt",
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(dec_dir)
-            .orderBy("doc_id")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-def _dedup_ingest_oracle() -> str:
-    from marketing_etl_analytics_spark.suite.ext import (
-        _SQL_BAND_SIG,
-        _SQL_MH_MINS,
-        MH_PRIME,
-        N_BANDS,
-        SQL_SHINGLES,
-    )
-
-    return f"""
+# The MinHash band CTEs both ingest oracles start from: the batch twin
+# of suite.ext.minhash_signatures_frame/minhash_bands_frame.
+_SQL_INGEST_BANDS = f"""
     WITH shingled AS (
       SELECT doc_id, {SQL_SHINGLES} AS shingles
       FROM documents
@@ -853,7 +664,43 @@ def _dedup_ingest_oracle() -> str:
              CASE band {_SQL_BAND_SIG} END AS band_sig
       FROM hashed, (SELECT unnest(generate_series(0, {N_BANDS - 1})) AS band)
     ),
-    matches AS (
+"""
+
+
+def _dedup_ingest(spark: SparkSession, sf_dir: str, compact_index: bool) -> DataFrame:
+    """Stream the document feed through ``dedup_ingest_sink`` and
+    return the per-doc decisions, ordered by doc_id."""
+    from marketing_etl_analytics_spark.streaming.events_stream import (
+        read_table_stream,
+        run_bounded_stream,
+    )
+    from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
+
+    docs = read_table_stream(spark, sf_dir, "documents")
+
+    def start(base: str):
+        return dedup_ingest_sink(
+            docs,
+            index_dir=f"{base}/index",
+            decisions_dir=f"{base}/decisions",
+            checkpoint_dir=f"{base}/ckpt",
+            compact_index=compact_index,
+        )
+
+    def result(base: str) -> DataFrame:
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(f"{base}/decisions")
+            .orderBy("doc_id")
+        )
+
+    return run_bounded_stream(spark, sf_dir, "documents", start, result)
+
+
+@register(
+    "stream_dedup_ingest",
+    _SQL_INGEST_BANDS
+    + """    matches AS (
       SELECT b2.doc_id AS d, COUNT(DISTINCT b1.doc_id) AS ne
       FROM bands b1
       JOIN bands b2
@@ -867,17 +714,27 @@ def _dedup_ingest_oracle() -> str:
     FROM documents d
     LEFT JOIN matches m ON m.d = d.doc_id
     ORDER BY d.doc_id
-    """
-
-
-# register() already ran with oracle=None; patch in the assembled SQL
-# (kept out of the decorator so the fragment imports stay local)
-SUITE["stream_dedup_ingest"] = SuiteEntry(
-    name="stream_dedup_ingest",
-    fn=SUITE["stream_dedup_ingest"].fn,
-    oracle=_dedup_ingest_oracle(),
-    doc=SUITE["stream_dedup_ingest"].doc,
+    """,
+    doc="Continuous dedup ingest: the document feed streams in, each "
+    "micro-batch computes its MinHash band signatures "
+    "(suite.ext.minhash_signatures_frame/minhash_bands_frame — the "
+    "same pipeline the standing index persists), appends them to the "
+    "accumulating signature index, and flags every arriving doc "
+    "against ALL docs that ARRIVED before it (standing index "
+    "regardless of id, plus earlier-in-batch by doc_id) — so no "
+    "clone pair is ever lost to a batch split: the late-arriving "
+    "side is flagged even when it carries the smaller id (pinned by "
+    "the out-of-order pytest). Under an id-ordered feed — this "
+    "entry's single availableNow batch included — the decision set "
+    "equals the id-ordered batch oracle exactly. "
+    "The ingest join is asymmetric "
+    "(batch x index), so per-batch cost scales with the delta. "
+    "Bucket caps deliberately live in the STANDING dedup entries "
+    "(corpus-global statistics); composing cap_lsh_buckets onto the "
+    "index here gives decisions-at-time semantics at scale.",
 )
+def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _dedup_ingest(spark, sf_dir, compact_index=False)
 
 
 # --- capped dedup ingest: representative index (r6, VERDICT r5 #5) -----------
@@ -899,83 +756,8 @@ SUITE["stream_dedup_ingest"] = SuiteEntry(
 
 @register(
     "ext_dedup_ingest_capped",
-    None,  # oracle assembled below (needs ext.py's SQL fragments)
-    doc="Capped (representative-index) continuous dedup ingest "
-    "(VERDICT r5 #5): the streaming MinHash ingest of "
-    "stream_dedup_ingest with per-band index COMPACTION — the "
-    "standing index keeps one representative doc per (band, "
-    "band_sig), so index size tracks distinct signatures (unique "
-    "content), not feed volume, and the per-batch probe joins "
-    "against a bounded index. Emits per doc the count of its band "
-    "signatures already seen by an earlier arrival and the novelty "
-    "flag (equivalent to the uncompacted entry's flag — "
-    "pytest-pinned). Runs end-to-end under Structured Streaming "
-    "(availableNow, batchId-keyed replay-idempotent writes).",
-)
-def ext_dedup_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_table_stream,
-    )
-    from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
-
-    base = tempfile.mkdtemp(prefix=f"dedup_capped_{uuid.uuid4().hex[:8]}_")
-    dec_dir = f"{base}/decisions"
-    try:
-        q = dedup_ingest_sink(
-            read_table_stream(spark, sf_dir, "documents"),
-            index_dir=f"{base}/index",
-            decisions_dir=dec_dir,
-            checkpoint_dir=f"{base}/ckpt",
-            compact_index=True,
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(dec_dir)
-            .orderBy("doc_id")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-def _dedup_ingest_capped_oracle() -> str:
-    from marketing_etl_analytics_spark.suite.ext import (
-        _SQL_BAND_SIG,
-        _SQL_MH_MINS,
-        MH_PRIME,
-        N_BANDS,
-        SQL_SHINGLES,
-    )
-
-    return f"""
-    WITH shingled AS (
-      SELECT doc_id, {SQL_SHINGLES} AS shingles
-      FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 3
-    ),
-    exploded AS (
-      SELECT doc_id,
-        ('0x' || substr(md5(unnest(shingles)), 1, 12))::BIGINT % {MH_PRIME} AS h
-      FROM shingled
-    ),
-    hashed AS (
-      SELECT doc_id,
-             {_SQL_MH_MINS}
-      FROM exploded
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, band,
-             CASE band {_SQL_BAND_SIG} END AS band_sig
-      FROM hashed, (SELECT unnest(generate_series(0, {N_BANDS - 1})) AS band)
-    ),
-    firsts AS (
+    _SQL_INGEST_BANDS
+    + """    firsts AS (
       SELECT band, band_sig, MIN(doc_id) AS rep
       FROM bands GROUP BY band, band_sig
     ),
@@ -993,12 +775,18 @@ def _dedup_ingest_capped_oracle() -> str:
     FROM documents d
     LEFT JOIN perdoc p ON p.doc_id = d.doc_id
     ORDER BY d.doc_id
-    """
-
-
-SUITE["ext_dedup_ingest_capped"] = SuiteEntry(
-    name="ext_dedup_ingest_capped",
-    fn=SUITE["ext_dedup_ingest_capped"].fn,
-    oracle=_dedup_ingest_capped_oracle(),
-    doc=SUITE["ext_dedup_ingest_capped"].doc,
+    """,
+    doc="Capped (representative-index) continuous dedup ingest "
+    "(VERDICT r5 #5): the streaming MinHash ingest of "
+    "stream_dedup_ingest with per-band index COMPACTION — the "
+    "standing index keeps one representative doc per (band, "
+    "band_sig), so index size tracks distinct signatures (unique "
+    "content), not feed volume, and the per-batch probe joins "
+    "against a bounded index. Emits per doc the count of its band "
+    "signatures already seen by an earlier arrival and the novelty "
+    "flag (equivalent to the uncompacted entry's flag — "
+    "pytest-pinned). Runs end-to-end under Structured Streaming "
+    "(availableNow, batchId-keyed replay-idempotent writes).",
 )
+def ext_dedup_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _dedup_ingest(spark, sf_dir, compact_index=True)
