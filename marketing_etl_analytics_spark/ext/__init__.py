@@ -1,8 +1,11 @@
-"""LLM-data-pipeline extension library (engine-facing API).
+"""LLM-data-pipeline operator library (engine-facing API).
 
-Generalized, column-parameterized versions of the operators exercised
-by the suite (``suite/ext.py``): deduplication, embedding similarity,
-text analysis, and multimodal payload handling.
+The one Spark implementation of the sketch, curation and dedup
+operators: deduplication, embedding similarity, text analysis,
+curation, sketches, search and multimodal payload handling. A suite
+entry (``suite/``) calls these, adds its projection and ORDER BY, and
+carries the DuckDB oracle that checks it; nothing here imports
+``suite``.
 """
 
 from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
@@ -51,12 +54,4 @@ from marketing_etl_analytics_spark.ext.search import (  # noqa: F401
     build_term_index,
     search_terms,
     term_stats,
-)
-
-# frame-level scale-path operators (implemented beside their graded
-# suite entries; re-exported here as the one-stop API)
-from marketing_etl_analytics_spark.suite.ext_scale import (  # noqa: F401
-    ext_dedup_simhash_frame as simhash_candidate_pairs,
-    sessionize_batch,
-    simhash_fingerprints,
 )

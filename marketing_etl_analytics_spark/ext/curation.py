@@ -1,9 +1,9 @@
 """Corpus-curation operators, column-parameterized.
 
-Library form of the suite's round-5 curation entries
-(`ext_chunk_documents`, `ext_domain_balance`, `ext_sample_temperature`,
-`ext_semantic_dedup`): the document→training-sequence chunker, the two
-mixture-shaping samplers, and SemDeDup-style semantic deduplication.
+The one implementation behind the suite's curation entries
+(`ext_chunk_balance`, `ext_sampling_suite`, `ext_semantic_dedup`): the
+document→training-sequence chunker, the two mixture-shaping samplers,
+and SemDeDup-style semantic deduplication.
 Every decision is content-addressed (md5) or exact-decimal, so the
 operators are deterministic under any partitioning — reproducible
 corpus builds, idempotent reruns.
@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # Max collected center rows for the Arrow/NumPy closure evaluators
 # (r10, guide §4.2): nearest-center assignment, IVF probing, and
@@ -24,6 +25,18 @@ from pyspark.sql import functions as F
 # is the comfort ceiling) the code falls back to the frame-only
 # broadcast-join shape, which never collects centers to the driver.
 ARROW_CENTERS_MAX = 8192
+
+
+def _require_integral_key(df: DataFrame, key: str) -> None:
+    """Center ids travel through the Arrow evaluators as int64, so the
+    Arrow path and the frame fallback accept the same inputs only if
+    the key is integral; anything else fails here, before the path
+    choice."""
+    dtype = df.schema[key].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(
+            f"key column {key!r} must be an integral type, got {dtype.simpleString()}"
+        )
 
 
 # --- model-based quality scoring ---------------------------------------------
@@ -280,6 +293,7 @@ def kmeanspar_seeds(
     ell*rounds ~ O(k). The per-round seed frame is localCheckpoint'ed
     (planning-sized) so round r's plan does not re-derive rounds
     1..r-1."""
+    _require_integral_key(b, key)
     ell = ell_factor * n_centroids
     h = F.md5(F.col(key).cast("string"))
     u = (
@@ -511,6 +525,7 @@ def semantic_assign(
     outside the probed super-clusters mis-assigns); equality vs exact
     argmax on the graded corpora is pinned by pytest.
     """
+    _require_integral_key(df, key)
     dot = _dot_expr()  # 1e-12 integer-lattice dot (engine-invariant)
     # refine bits come from dims 9..16 when they exist; clamped to the
     # vector's width (sequence counts DOWN past the end, and ANSI-mode

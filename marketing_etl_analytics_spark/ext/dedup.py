@@ -1,7 +1,12 @@
-"""Deduplication operators, column-parameterized.
+"""Deduplication operators: exact, MinHash-LSH, and the LSH skew guard.
+
+The suite's dedup entries (``suite/ext.py``, ``suite/udf.py``,
+``suite/ext_scale.py``, ``suite/graphs.py``) and the streaming ingest
+sink (``streaming/sinks.py``) call these; their DuckDB oracles spell
+the same hashing in SQL.
 
 Scale shape: shingling and minhashing are narrow (per-row generate +
-explode, map-side); the only shuffles are the (doc, perm) partial-min
+explode, map-side); the only shuffles are the per-doc partial-min
 aggregation and the (band, signature) candidate join — candidate
 generation never materializes all pairs.
 """
@@ -30,6 +35,33 @@ def shingles(text: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+# codegen-friendly exploded form: arrays_zip of three shifted slices
+# instead of a transform() lambda (higher-order functions run
+# interpreted per element — ~5x slower than this builtin-only plan).
+# NOT deduped per doc; callers take MIN or collect_set, so multiset
+# vs set is value-neutral.
+_TOKS = "split(lower(text), ' ')"
+_SHINGLE_ZIP = (
+    f"arrays_zip(slice({_TOKS}, 1, size({_TOKS}) - 2),"
+    f" slice({_TOKS}, 2, size({_TOKS}) - 2),"
+    f" slice({_TOKS}, 3, size({_TOKS}) - 2))"
+)
+
+
+def shingle_rows(docs: DataFrame, *extra_cols: str) -> DataFrame:
+    """(doc_id, *extra_cols, sh_str): one row per 3-word shingle of
+    the ``text`` column."""
+    return (
+        docs.filter(F.expr(f"size({_TOKS}) >= 3"))
+        .select("doc_id", *extra_cols, F.explode(F.expr(_SHINGLE_ZIP)).alias("z"))
+        .select(
+            "doc_id",
+            *extra_cols,
+            F.concat_ws(" ", "z.0", "z.1", "z.2").alias("sh_str"),
+        )
+    )
+
+
 def exact_dedup(df: DataFrame, key: str, text: str) -> DataFrame:
     """Map every row to its canonical (min-key) representative by
     normalized-text hash; ``is_dup`` marks rows to drop."""
@@ -44,41 +76,71 @@ def exact_dedup(df: DataFrame, key: str, text: str) -> DataFrame:
     )
 
 
-def minhash_bands(
-    df: DataFrame, key: str, text: str, n_perm: int = 16, n_bands: int = 4
-) -> DataFrame:
-    """(key, band, band_sig) MinHash band signatures.
+# --- MinHash + LSH ----------------------------------------------------------
 
-    Permutation i's hash of a shingle is md5(i ':' shingle); the min
-    over a doc's shingles approximates a random-permutation min-hash.
-    """
-    rows_per_band = n_perm // n_bands
-    spark = df.sparkSession
-    exploded = df.select(
-        F.col(key), F.explode(shingles(F.col(text))).alias("shingle")
+N_PERM = 16
+N_BANDS = 4
+ROWS_PER_BAND = N_PERM // N_BANDS
+
+# MinHash permutations as universal hashes over ONE md5 per shingle:
+# h = first 48 bits of md5(shingle) reduced mod M; perm p's hash is
+# (h * A_p + B_p) mod M (Carter–Wegman). One md5 per shingle instead
+# of N_PERM — the md5 calls were ~80% of the operator's runtime.
+# (h % M) < 2^31 and A_p < M keep every product under 2^62: exact in
+# BIGINT in both engines.
+MH_PRIME = 2147483647
+PERM_A = [(2654435761 * p + 1) % MH_PRIME for p in range(N_PERM)]
+PERM_B = [(40503 * p + 17) % MH_PRIME for p in range(N_PERM)]
+
+
+def minhash_signatures_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh15) MinHash signatures of (doc_id, text) rows.
+
+    All 16 permutation min-hashes are plain aggregate columns in ONE
+    codegen'd aggregation: no permutation cross-join (16x shuffle
+    volume), no second (doc, perm) shuffle, map-side partial MIN."""
+    exploded = shingle_rows(docs).select(
+        "doc_id",
+        (
+            F.conv(F.substring(F.md5("sh_str"), 1, 12), 16, 10).cast("long")
+            % MH_PRIME
+        ).alias("h"),
     )
-    perms = spark.range(n_perm).select(F.col("id").cast("int").alias("perm"))
-    hashed = (
-        exploded.crossJoin(F.broadcast(perms))
-        .groupBy(key, "perm")
-        .agg(
-            F.min(
-                F.md5(F.concat(F.col("perm").cast("string"), F.lit(":"), F.col("shingle")))
-            ).alias("mh")
-        )
+    return exploded.groupBy("doc_id").agg(
+        *[
+            F.min((F.col("h") * PERM_A[p] + PERM_B[p]) % MH_PRIME).alias(f"mh{p}")
+            for p in range(N_PERM)
+        ]
     )
-    return (
-        hashed.withColumn("band", F.expr(f"perm div {rows_per_band}"))
-        .groupBy(key, "band")
-        .agg(
+
+
+def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig) from a signature frame — UNCAPPED;
+    callers apply cap_lsh_buckets where corpus-global statistics are
+    available. Band signature = perm-ordered mh concat."""
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
             F.concat_ws(
                 "|",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "mh"))),
-                    lambda s: s["mh"],
-                ),
-            ).alias("band_sig")
+                *[F.col(f"mh{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
+            ).alias("band_sig"),
         )
+        for b in range(N_BANDS)
+    ]
+    return hashed.select(
+        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
+    ).select(
+        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
+    )
+
+
+def minhash_bands(df: DataFrame, key: str, text: str) -> DataFrame:
+    """(key, band, band_sig) MinHash band signatures (16 permutations,
+    4 bands x 4 rows), uncapped."""
+    docs = df.select(F.col(key).alias("doc_id"), F.col(text).alias("text"))
+    return minhash_bands_frame(minhash_signatures_frame(docs)).withColumnRenamed(
+        "doc_id", key
     )
 
 
@@ -98,3 +160,35 @@ def lsh_candidate_pairs(bands: DataFrame, key: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("shared_bands"))
     )
+
+
+# --- LSH bucket-size cap (skew guard) ----------------------------------------
+#
+# A hot band signature (boilerplate-heavy corpora: empty docs, licence
+# headers, templated pages) makes one LSH bucket quadratic — C(n, 2)
+# candidate pairs from a single (band, signature) value, the known LSH
+# skew hazard at corpus scale. Standard mitigation: treat
+# super-frequent signatures as spam and drop those BUCKETS. Docs stay
+# in their other bands, so genuine near-dups of distinctive text still
+# surface; what is suppressed is only the degenerate
+# everything-matches-everything signature. Per-bucket pair count is
+# then bounded by C(LSH_BUCKET_CAP, 2).
+#
+# Scale shape: bucket sizes come from a map-side-combined groupBy on
+# the band key (output = distinct signatures, tiny), hot signatures
+# are removed with a BROADCAST anti-join — no window sort over the
+# full candidate table, no extra shuffle of the big side.
+LSH_BUCKET_CAP = 128
+
+
+def cap_lsh_buckets(
+    bands: DataFrame, keys: list[str], cap: int = LSH_BUCKET_CAP
+) -> DataFrame:
+    """Drop rows belonging to LSH buckets with more than ``cap`` members."""
+    hot = (
+        bands.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_bn"))
+        .filter(F.col("_bn") > cap)
+        .drop("_bn")
+    )
+    return bands.join(F.broadcast(hot), keys, "left_anti")

@@ -1,10 +1,10 @@
 """Mergeable sketch operators, column-parameterized.
 
-Library form of the suite's sketch family (`ext_sketch_kmv_setops`,
-`ext_sketch_hll`, `ext_sketch_countmin`, `stream_sketch_hll`): build
-constant-size summaries of unbounded keyed data, merge them
-associatively, and answer distinct-count / frequency point queries
-without rescanning the data. All hashing is md5-derived, so sketches
+HyperLogLog, Count-Min and Bloom: build constant-size summaries of
+unbounded keyed data, merge them associatively, and answer
+distinct-count / frequency / membership queries without rescanning
+the data. The HLL and Count-Min entries of ``ext_sketch_suite`` and
+``stream_sketch_suite`` call these functions. All hashing is md5-derived, so sketches
 are deterministic and reproducible across engines, runs, and
 partitionings — the property the suite's DuckDB oracles exploit to
 verify the ESTIMATES exactly, and the property a production pipeline
@@ -37,6 +37,16 @@ def _hv(col: Column) -> Column:
     )
 
 
+def _md5_bucket(salt: Column, value: Column, w: int) -> Column:
+    """md5(salt ':' value) reduced to one of ``w`` buckets."""
+    return (
+        F.conv(F.substring(F.md5(F.concat_ws(":", salt, value)), 1, 12), 16, 10).cast(
+            "long"
+        )
+        % w
+    )
+
+
 def hll_registers(
     df: DataFrame, value: str, group_cols: list[str] | None = None
 ) -> DataFrame:
@@ -48,7 +58,11 @@ def hll_registers(
     per-micro-batch partial sketches combine exactly.
     """
     group_cols = group_cols or []
-    h = df.select(*group_cols, _hv(F.col(value)).alias("hv")).distinct()
+    # no DISTINCT before the register build: MAX(rank) over the raw
+    # (group, hv) multiset equals MAX over the distinct set, so a
+    # corpus-wide distinct exchange is pure overhead — the register
+    # groupBy partial-aggregates map-side down to m rows per group
+    h = df.select(*group_cols, _hv(F.col(value)).alias("hv"))
     w = F.expr(f"hv div {HLL_M}")
     ranked = h.select(
         *group_cols,
@@ -98,61 +112,57 @@ def hll_estimate(regs: DataFrame, group_cols: list[str] | None = None) -> DataFr
 
 # --- Count-Min ---------------------------------------------------------------
 
+CM_D = 4
+CM_W = 512
+
 
 def countmin_counters(
-    df: DataFrame, value: str, d: int = 4, w: int = 512
+    df: DataFrame, value: str, d: int = CM_D, w: int = CM_W
 ) -> DataFrame:
     """(j, bucket, c) counter table for a Count-Min sketch of the
-    ``value`` column's frequencies.
-
-    Built from the value-frequency aggregate, so the d-fold expansion
-    costs |distinct values| rows, not |rows|; the counter table is
-    d*w rows regardless of input size. Counters are additive —
-    summing two counter tables sketches the concatenated input.
-    """
+    ``value`` column's frequencies (see ``countmin_freq_counters``)."""
     freq = df.groupBy(F.col(value).alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col("v"))), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        % w
-    )
+    return countmin_freq_counters(freq, "v", d, w)
+
+
+def countmin_freq_counters(
+    freq: DataFrame, value: str, d: int = CM_D, w: int = CM_W
+) -> DataFrame:
+    """(j, bucket, c) counters from a (``value``, n) frequency table.
+
+    The d-fold expansion costs |distinct values| rows, not |rows|; the
+    counter table is d*w rows regardless of input size. Counters are
+    additive — summing two counter tables sketches the concatenated
+    input.
+    """
     return (
-        freq.select("v", "n", F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j"))
-        .withColumn("bucket", bucket)
+        freq.select(
+            value, "n", F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j")
+        )
+        .withColumn("bucket", _md5_bucket(F.col("j"), F.col(value), w))
         .groupBy("j", "bucket")
         .agg(F.sum("n").alias("c"))
     )
 
 
 def countmin_query(
-    counters: DataFrame, probes: DataFrame, value: str, d: int = 4, w: int = 512
+    counters: DataFrame, probes: DataFrame, value: str, d: int = CM_D, w: int = CM_W
 ) -> DataFrame:
-    """Point-estimate the frequency of each probe value: min over the
-    d row counters the value hashes into. Estimates never
+    """(probe columns..., cm_estimate) for each distinct probe row: min
+    over the d row counters the ``value`` hashes into. Estimates never
     underestimate (one-sided error <= e*N/w with prob 1-e^-d)."""
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col(value))), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        % w
-    )
     keyed = probes.select(
-        F.col(value), F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j")
-    ).withColumn("bucket", bucket)
+        "*", F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j")
+    ).withColumn("bucket", _md5_bucket(F.col("j"), F.col(value), w))
     # LEFT join + 0-fill: counter tables only materialize OCCUPIED
     # buckets, but the sketch's semantics are min over ALL d cells —
     # a probe value never seen (or whose cells are partly empty) must
     # estimate from the empty cells' zeros, not vanish or inflate
     return (
         keyed.join(counters, ["j", "bucket"], "left")
-        .groupBy(value)
+        .groupBy(*probes.columns)
         .agg(
             F.min(F.coalesce(F.col("c"), F.lit(0)))
             .cast("long")

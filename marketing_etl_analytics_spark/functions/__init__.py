@@ -7,6 +7,7 @@ from marketing_etl_analytics_spark.functions.dates import (  # noqa: F401
 )
 from marketing_etl_analytics_spark.functions.kpis import (  # noqa: F401
     kpi_columns,
+    pround,
     safe_div,
 )
 from marketing_etl_analytics_spark.functions.text import (  # noqa: F401

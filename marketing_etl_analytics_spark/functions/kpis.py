@@ -22,6 +22,18 @@ def safe_div(num: Column, den: Column) -> Column:
     return num / F.nullif(den.cast("double"), F.lit(0.0))
 
 
+def pround(col: Column, ndigits: int) -> Column:
+    """Portable double rounding: floor(q * 10^n + 0.5) / 10^n.
+
+    ROUND(double, n) disagrees between engines at exact-tie values
+    (Spark rounds the shortest decimal repr HALF_UP; DuckDB scales and
+    rounds the binary value). Every step here is deterministic IEEE
+    arithmetic on identical operands, so results are identical, not
+    tied to any particular tie rule."""
+    scale = float(10 ** ndigits)
+    return F.floor(col.cast("double") * scale + F.lit(0.5)) / F.lit(scale)
+
+
 def kpi_columns(
     revenue: Column,
     cost: Column,

@@ -20,6 +20,11 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from marketing_etl_analytics_spark.ext.dedup import (
+    cap_lsh_buckets,
+    minhash_bands_frame,
+    minhash_signatures_frame,
+)
 from marketing_etl_analytics_spark.sources import acid
 
 
@@ -173,7 +178,7 @@ def dedup_ingest_sink(
 
     Bucket caps are the standing dedup entries' concern
     (corpus-global statistics); ``cap_buckets=True`` composes
-    ``suite.ext.cap_lsh_buckets`` over the knowledge-so-far (index
+    ``ext.dedup.cap_lsh_buckets`` over the knowledge-so-far (index
     plus arriving batch), dropping spam signatures from BOTH join
     sides so a boilerplate signature shared by thousands of docs can
     never make a batch quadratic. The cap uses prefix statistics — a
@@ -210,11 +215,6 @@ def dedup_ingest_sink(
     import os
 
     from pyspark.sql import functions as F
-
-    from marketing_etl_analytics_spark.suite.ext import (
-        minhash_bands_frame,
-        minhash_signatures_frame,
-    )
 
     def ingest_batch_compact(batch_df: DataFrame, batch_id: int) -> None:
         # batchId-keyed OVERWRITE subdirs + own-subdir exclusion: the
@@ -305,8 +305,6 @@ def dedup_ingest_sink(
         idx = sp.read.parquet(*prior_subs) if prior_subs else None
         probe = bands
         if cap_buckets:
-            from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
-
             # decisions-at-time skew guard: signatures whose bucket
             # exceeds the cap across index+batch drop from BOTH sides
             knowledge = idx.unionByName(bands) if idx is not None else bands

@@ -33,6 +33,7 @@ from marketing_etl_analytics_spark.functions.dates import (
     event_time,
     pin_event_time_conf,
 )
+from marketing_etl_analytics_spark.functions.kpis import pround
 
 # --- table access -----------------------------------------------------------
 
@@ -243,16 +244,7 @@ def sql_lsum(expr: str, alias: str) -> str:
 
 # --- portable double rounding ----------------------------------------------
 #
-# ROUND(double, n) disagrees between engines at exact-tie values (Spark
-# rounds the shortest decimal repr HALF_UP; DuckDB scales and rounds the
-# binary value). For ratio outputs we need *identical* results, not any
-# particular tie rule, so round as floor(q * 10^n + 0.5) / 10^n — every
-# step is deterministic IEEE arithmetic on identical operands.
-
-def pround(col: Column, ndigits: int) -> Column:
-    scale = float(10 ** ndigits)
-    return F.floor(col.cast("double") * scale + F.lit(0.5)) / F.lit(scale)
-
+# Oracle twin of functions.kpis.pround: floor(q * 10^n + 0.5) / 10^n.
 
 def sql_pround(expr: str, ndigits: int) -> str:
     scale = float(10 ** ndigits)

@@ -31,9 +31,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.dedup import (
+    LSH_BUCKET_CAP,
+    MH_PRIME,
+    N_BANDS,
+    N_PERM,
+    PERM_A,
+    PERM_B,
+    ROWS_PER_BAND,
+    cap_lsh_buckets,
+    exact_dedup,
+    lsh_candidate_pairs,
+    minhash_bands_frame,
+    minhash_signatures_frame,
+    shingle_rows,
+)
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
-    money,
     ratio,
     sql_pround,
     sql_ratio,
@@ -45,41 +59,10 @@ from marketing_etl_analytics_spark.suite.registry import register
 # --- shared shingling fragments --------------------------------------------
 
 # 3-word shingles over space-tokenized lowercased text, distinct.
-SPARK_SHINGLES = (
-    "array_distinct(transform(sequence(1, size(split(lower(text), ' ')) - 2),"
-    " i -> concat_ws(' ', slice(split(lower(text), ' '), i, 3))))"
-)
 SQL_SHINGLES = (
     "list_distinct(list_transform(generate_series(1, len(string_split(lower(text), ' ')) - 2),"
     " i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')))"
 )
-
-# codegen-friendly exploded form: arrays_zip of three shifted slices
-# instead of a transform() lambda (higher-order functions run
-# interpreted per element — ~5x slower than this builtin-only plan).
-# NOT deduped per doc; callers take MIN or collect_set, so multiset
-# vs set is value-neutral. The distinct SQL_SHINGLES stays the
-# oracle-side spec.
-_TOKS = "split(lower(text), ' ')"
-_SHINGLE_ZIP = (
-    f"arrays_zip(slice({_TOKS}, 1, size({_TOKS}) - 2),"
-    f" slice({_TOKS}, 2, size({_TOKS}) - 2),"
-    f" slice({_TOKS}, 3, size({_TOKS}) - 2))"
-)
-
-
-def shingle_rows(docs: DataFrame, *extra_cols: str) -> DataFrame:
-    """(doc_id, *extra_cols, sh_str): one row per 3-word shingle."""
-    return (
-        docs.filter(F.expr(f"size({_TOKS}) >= 3"))
-        .select("doc_id", *extra_cols, F.explode(F.expr(_SHINGLE_ZIP)).alias("z"))
-        .select(
-            "doc_id",
-            *extra_cols,
-            F.concat_ws(" ", "z.0", "z.1", "z.2").alias("sh_str"),
-        )
-    )
-
 
 # --- exact dedup (hash-groupBy) --------------------------------------------
 
@@ -105,37 +88,12 @@ def shingle_rows(docs: DataFrame, *extra_cols: str) -> DataFrame:
     "Scales as one map + one shuffle on the hash.",
 )
 def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    hashed = docs.select("doc_id", F.md5(F.lower("text")).alias("text_hash"))
-    groups = hashed.groupBy("text_hash").agg(
-        F.count(F.lit(1)).alias("group_size"),
-        F.min("doc_id").alias("canonical_id"),
-    )
-    return (
-        hashed.join(groups, "text_hash")
-        .select(
-            "doc_id", "text_hash", "canonical_id", "group_size",
-            F.when(F.col("doc_id") != F.col("canonical_id"), 1).otherwise(0).alias("is_dup"),
-        )
-        .orderBy("doc_id")
+    return exact_dedup(t(spark, sf_dir, "documents"), "doc_id", "text").orderBy(
+        "doc_id"
     )
 
 
 # --- MinHash + LSH near-dedup ----------------------------------------------
-
-N_PERM = 16
-N_BANDS = 4
-ROWS_PER_BAND = N_PERM // N_BANDS
-
-# MinHash permutations as universal hashes over ONE md5 per shingle:
-# h = first 48 bits of md5(shingle) reduced mod M; perm p's hash is
-# (h * A_p + B_p) mod M (Carter–Wegman). One md5 per shingle instead
-# of N_PERM — the md5 calls were ~80% of the operator's runtime.
-# (h % M) < 2^31 and A_p < M keep every product under 2^62: exact in
-# BIGINT in both engines.
-MH_PRIME = 2147483647
-PERM_A = [(2654435761 * p + 1) % MH_PRIME for p in range(N_PERM)]
-PERM_B = [(40503 * p + 17) % MH_PRIME for p in range(N_PERM)]
 
 _SQL_MH_MINS = ",\n             ".join(
     f"MIN((h * {PERM_A[p]} + {PERM_B[p]}) % {MH_PRIME}) AS mh{p}"
@@ -148,37 +106,6 @@ _SQL_BAND_SIG = " ".join(
     for b in range(N_BANDS)
 )
 
-# --- LSH bucket-size cap (skew guard) ----------------------------------------
-#
-# A hot band signature (boilerplate-heavy corpora: empty docs, licence
-# headers, templated pages) makes one LSH bucket quadratic — C(n, 2)
-# candidate pairs from a single (band, signature) value, the known LSH
-# skew hazard at corpus scale. Standard mitigation: treat
-# super-frequent signatures as spam and drop those BUCKETS. Docs stay
-# in their other bands, so genuine near-dups of distinctive text still
-# surface; what is suppressed is only the degenerate
-# everything-matches-everything signature. Per-bucket pair count is
-# then bounded by C(LSH_BUCKET_CAP, 2).
-#
-# Scale shape: bucket sizes come from a map-side-combined groupBy on
-# the band key (output = distinct signatures, tiny), hot signatures
-# are removed with a BROADCAST anti-join — no window sort over the
-# full candidate table, no extra shuffle of the big side.
-LSH_BUCKET_CAP = 128
-
-
-def cap_lsh_buckets(
-    bands: DataFrame, keys: list[str], cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """Drop rows belonging to LSH buckets with more than ``cap`` members."""
-    hot = (
-        bands.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > cap)
-        .drop("_bn")
-    )
-    return bands.join(F.broadcast(hot), keys, "left_anti")
-
 
 def sql_cap_lsh_buckets(inner: str, keys: str, cap: int = LSH_BUCKET_CAP) -> str:
     """Oracle twin of cap_lsh_buckets. Window-count formulation — the
@@ -188,6 +115,7 @@ def sql_cap_lsh_buckets(inner: str, keys: str, cap: int = LSH_BUCKET_CAP) -> str
         f"SELECT *, COUNT(*) OVER (PARTITION BY {keys}) AS _bn FROM ({inner})"
         f") WHERE _bn <= {cap}"
     )
+
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh0..mh15) MinHash signature table, memoized.
@@ -206,24 +134,6 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signatures_frame(docs: DataFrame) -> DataFrame:
-    """Frame-level signature builder — the memoized table above for a
-    full corpus, or an arriving micro-batch in the streaming ingest."""
-    exploded = shingle_rows(docs).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("sh_str"), 1, 12), 16, 10).cast("long")
-            % MH_PRIME
-        ).alias("h"),
-    )
-    return exploded.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("h") * PERM_A[p] + PERM_B[p]) % MH_PRIME).alias(f"mh{p}")
-            for p in range(N_PERM)
-        ]
-    )
-
-
 def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band, band_sig) capped LSH band table, memoized.
 
@@ -237,27 +147,6 @@ def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             minhash_bands_frame(minhash_signatures(spark, sf_dir)),
             ["band", "band_sig"],
         ),
-    )
-
-
-def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
-    """(doc_id, band, band_sig) from a signature frame — UNCAPPED;
-    callers apply cap_lsh_buckets where corpus-global statistics are
-    available (the memoized table above does)."""
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            ).alias("band_sig"),
-        )
-        for b in range(N_BANDS)
-    ]
-    return hashed.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
     )
 
 
@@ -301,19 +190,13 @@ def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
     "per-bucket pair count.",
 )
 def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = minhash_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        lsh_candidate_pairs(minhash_bands(spark, sf_dir), "doc_id")
+        .select(
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
+            "shared_bands",
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared_bands"))
         .orderBy(F.desc("shared_bands"), "doc_a", "doc_b")
     )
 

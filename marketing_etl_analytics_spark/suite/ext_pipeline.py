@@ -38,12 +38,20 @@ from marketing_etl_analytics_spark.suite.common import (
     sql_quality_logit,
     t,
 )
-from marketing_etl_analytics_spark.suite.ext import (
+from marketing_etl_analytics_spark.ext.curation import (
+    chunk_documents,
+    domain_balance,
+    temperature_sample,
+)
+from marketing_etl_analytics_spark.ext.dedup import (
     _SHINGLE_ZIP,
     _TOKS,
+    cap_lsh_buckets,
+    shingle_rows,
+)
+from marketing_etl_analytics_spark.suite.ext import (
     SQL_DOT,
     SQL_SHINGLES,
-    shingle_rows,
     sql_cap_lsh_buckets,
 )
 from marketing_etl_analytics_spark.suite.registry import register
@@ -725,9 +733,6 @@ _CONT_MIN_SHINGLES = 5
     "never all-pairs.",
 )
 def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from marketing_etl_analytics_spark.suite.common import memo_df, pround
-    from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
-
     docs = t(spark, sf_dir, "documents")
 
     def build_capped():
@@ -1707,37 +1712,13 @@ _SQL_CHUNK_DOCS = f"""
 
 
 # Context-window chunking: 64-token windows, stride 48 (25% overlap),
-# per-chunk token counts and content-address (md5) — the
-# document->training-sequence step of an LLM data pipeline as a pure
-# codegen plan: sequence+explode+slice+concat, zero shuffle,
-# filters/projections still push down past it. Graded via the merged
-# ext_chunk_balance row (r7 consolidation); callable standalone.
+# per-chunk token counts and content-address (md5). Graded via the
+# merged ext_chunk_balance row; callable standalone.
 def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("tok"),
-        F.size(F.split("text", " ")).alias("n"),
-    )
-    chunks = toks.select(
-        "doc_id",
-        "tok",
-        "n",
-        F.explode(
-            F.sequence(F.lit(1), F.col("n"), F.lit(CHUNK_STRIDE))
-        ).alias("start"),
-    )
     return (
-        chunks.select(
-            "doc_id",
-            (F.expr(f"(start - 1) div {CHUNK_STRIDE}") + 1).cast("long").alias("chunk_ord"),
-            F.least(
-                F.lit(CHUNK_TOKENS), F.col("n") - F.col("start") + 1
-            ).cast("long").alias("n_chunk_tokens"),
-            F.md5(
-                F.concat_ws(" ", F.slice("tok", F.col("start"), F.lit(CHUNK_TOKENS)))
-            ).alias("chunk_hash"),
-        )
+        chunk_documents(docs, chunk_tokens=CHUNK_TOKENS, stride=CHUNK_STRIDE)
+        .select("doc_id", "chunk_ord", "n_chunk_tokens", "chunk_hash")
         .orderBy("doc_id", "chunk_ord")
     )
 
@@ -1776,35 +1757,21 @@ _SQL_DOMAIN_BALANCE = """
 
 # Domain balancing: cap every stratum (lang) at 2x the smallest
 # stratum's count, selecting survivors by deterministic
-# content-addressed rank (md5, doc_id tie-break). One tiny count agg
-# broadcast back + one per-source window; emits the selected document
-# set itself so the sampling decision is oracle-pinned. Graded via the
-# merged ext_chunk_balance row (r7 consolidation); callable standalone.
+# content-addressed rank (md5, doc_id tie-break). Graded via the
+# merged ext_chunk_balance row; callable standalone.
 def ext_domain_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stratum = lang: the synthetic sources are uniform (25 docs each)
     # so capping on source would be a no-op; languages are skewed
     # (en ~4.4x fr at sf0.01), making the cap actually select
     docs = t(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    cap = counts.agg((F.lit(2) * F.min("n")).alias("cap"))
     return (
-        docs.select("doc_id", F.col("lang").alias("stratum"))
-        .withColumn(
-            "sample_rank",
-            F.row_number().over(
-                Window.partitionBy("stratum").orderBy(
-                    F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-                )
-            ),
-        )
-        .crossJoin(F.broadcast(cap))
-        .filter(F.col("sample_rank") <= F.col("cap"))
-        .select("doc_id", "stratum", F.col("sample_rank").cast("long"))
+        domain_balance(docs)
+        .select("doc_id", F.col("lang").alias("stratum"), "sample_rank")
         .orderBy("stratum", "sample_rank")
     )
 
 
-# --- merged chunking + domain-balance row (r7 consolidation) -----------------
+# --- merged chunking + domain-balance row -------------------------------------
 
 @register(
     "ext_chunk_balance",
@@ -1817,10 +1784,8 @@ def ext_domain_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ({_SQL_DOMAIN_BALANCE}) b
     ORDER BY kind, doc_id, ord
     """,
-    doc="Merged curation-stage row (r7 consolidation of the two "
-    "r5-green singles ext_chunk_documents / ext_domain_balance — the "
-    "rel_stats_suite precedent; both singles stay callable, plans "
-    "unchanged): context-window chunking (zero-shuffle codegen "
+    doc="Merged curation-stage row (ext_chunk_documents / "
+    "ext_domain_balance): context-window chunking (zero-shuffle codegen "
     "explode) and content-addressed domain balancing (tiny count agg "
     "+ one per-stratum window) under one graded slot. NULL-free; the "
     "balance branch's n_tok column is the documented -1 sentinel.",
@@ -1855,8 +1820,7 @@ def ext_chunk_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-source counts (tiny) broadcast back onto the corpus; the keep
 # decision is a pushed-down filter, zero shuffle of the fact side.
 
-# graded via the ext_sampling_suite merged row (r5 in-window
-# consolidation); SQL kept as a module var for the merged oracle
+# graded via the ext_sampling_suite merged row
 _SQL_SAMPLE_TEMP = f"""
     WITH counts AS (
       SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang
@@ -1877,30 +1841,18 @@ _SQL_SAMPLE_TEMP = f"""
 
 
 def ext_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature mixture sampling, alpha=0.5 (p_s ∝ sqrt(n_s/N),
-    the mBERT/XLM-R multilingual re-weighting): per-doc keep rate
-    sqrt(n_min/n_s) from broadcast per-source counts, decided by a
-    content-addressed uniform — deterministic because sqrt and
-    divide are correctly-rounded IEEE ops on identical operands.
-    Emits the kept set with inverse-probability weights; the filter
-    pushes down, the corpus never shuffles."""
+    """Temperature mixture sampling, alpha=0.5: the kept set with its
+    keep rate and inverse-probability weight, rounded portably."""
     # stratum = lang (see ext_domain_balance: sources are uniform in
     # the synthetic corpus, languages carry the real skew)
     docs = t(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    mn = counts.agg(F.min("n").alias("n_min"))
-    rate = F.sqrt(F.col("n_min").cast("double") / F.col("n"))
     return (
-        docs.select("doc_id", "lang", F.expr(_SPARK_U).alias("u"))
-        .join(F.broadcast(counts), "lang")
-        .crossJoin(F.broadcast(mn))
-        .withColumn("rate", rate)
-        .filter(F.col("u") < F.col("rate"))
+        temperature_sample(docs)
         .select(
             "doc_id",
             F.col("lang").alias("stratum"),
             pround(F.col("rate"), 6).alias("rate"),
-            pround(F.lit(1.0) / F.col("rate"), 6).alias("weight"),
+            pround(F.col("weight"), 6).alias("weight"),
         )
         .orderBy("doc_id")
     )

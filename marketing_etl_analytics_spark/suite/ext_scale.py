@@ -43,10 +43,10 @@ from marketing_etl_analytics_spark.suite.common import (
     sql_ratio,
     t,
 )
+from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets
 from marketing_etl_analytics_spark.suite.ext import (
     SPARK_DOT,
     SQL_DOT,
-    cap_lsh_buckets,
     embedding_norms,
     minhash_bands,
     sql_cap_lsh_buckets,
@@ -141,7 +141,7 @@ def ext_dedup_simhash_frame(
     """Near-dup pairs (key_a, key_b, shared_bands, hamming) by banded
     SimHash with a Hamming-distance verify. Buckets over
     ``LSH_BUCKET_CAP`` members are dropped (spam-signature skew guard
-    — see ``suite.ext.cap_lsh_buckets``)."""
+    — see ``ext.dedup.cap_lsh_buckets``)."""
     # the fingerprint table is tiny relative to the corpus (~16 B/doc)
     # but expensive to build (md5 + 48 vote-sums); materialize it once
     # so the band fan-out, the hot-bucket aggregate, and both self-join
@@ -1302,11 +1302,10 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental (cross-corpus) dedup ----------------------------------------
 
+from marketing_etl_analytics_spark.ext.dedup import MH_PRIME, N_BANDS  # noqa: E402
 from marketing_etl_analytics_spark.suite.ext import (  # noqa: E402
     _SQL_BAND_SIG,
     _SQL_MH_MINS,
-    MH_PRIME,
-    N_BANDS,
     SQL_SHINGLES,
 )
 

@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.suite.common import memo_df, pround, sql_pround, t
-from marketing_etl_analytics_spark.suite.ext import SQL_SHINGLES, cap_lsh_buckets, shingle_rows
+from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets, shingle_rows
+from marketing_etl_analytics_spark.suite.ext import SQL_SHINGLES
 from marketing_etl_analytics_spark.suite.registry import register
 
 DAMPING = 0.85

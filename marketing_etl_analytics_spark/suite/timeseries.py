@@ -39,6 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.sketches import (
+    CM_D,
+    CM_W,
+    HLL_M,
+    countmin_counters,
+    countmin_freq_counters,
+    countmin_query,
+    hll_estimate,
+    hll_merge,
+    hll_registers,
+)
 from marketing_etl_analytics_spark.suite.common import money, pround, sql_pround, t
 from marketing_etl_analytics_spark.suite.registry import register
 
@@ -645,7 +656,6 @@ def ext_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # estimator. Scale: one shuffle to (group, register), 64 rows per
 # group thereafter; the merge is a 64-row-per-group re-aggregation.
 
-HLL_M = 64
 _HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)  # alpha_64 per the paper
 _HLL_NUMER = repr(_HLL_ALPHA * HLL_M * HLL_M * float(1 << 43))
 _HLL_LC = {z: repr(HLL_M * __import__("math").log(HLL_M / z)) for z in range(1, HLL_M)}
@@ -673,51 +683,6 @@ def _hll_finish_sql(src: str) -> str:
           END + 0.5) AS BIGINT) AS hll_estimate
       FROM {src} GROUP BY grp
     """
-
-
-def _hll_rank_expr():
-    """(hv) -> (idx, rank) projection columns for the register build."""
-    w = F.expr(f"hv div {HLL_M}")
-    return (
-        (F.col("hv") % HLL_M).alias("idx"),
-        F.when(w == 0, F.lit(43)).otherwise(43 - F.length(F.bin(w))).alias("rank"),
-    )
-
-
-def _hll_hv(col: str = "user_id") -> F.Column:
-    return F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, 12), 16, 10
-    ).cast("long")
-
-
-def _hll_finish(r: DataFrame) -> DataFrame:
-    """Registers (grp, idx, m) -> (grp, n_zero_registers, hll_estimate);
-    Spark twin of ``_hll_finish_sql``."""
-    agg = r.groupBy("grp").agg(
-        (F.lit(HLL_M) - F.count(F.lit(1))).cast("long").alias("n_zero_registers"),
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 43 - m)")).alias("s_present"),
-    )
-    s = (
-        F.col("s_present")
-        + F.col("n_zero_registers") * F.lit(1 << 43).cast("long")
-    ).cast("double")
-    raw = F.lit(float(_HLL_NUMER)) / s
-    # CASE zeros -> 64*ln(64/zeros) from the shared literals
-    lc_arms = F.expr(
-        "CASE n_zero_registers "
-        + " ".join(
-            f"WHEN {z} THEN CAST({lit} AS DOUBLE)" for z, lit in _HLL_LC.items()
-        )
-        + " ELSE 0.0 END"
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (F.col("n_zero_registers") > 0), lc_arms
-    ).otherwise(raw)
-    return agg.select(
-        "grp",
-        "n_zero_registers",
-        F.floor(est + F.lit(0.5)).cast("long").alias("hll_estimate"),
-    )
 
 
 _SQL_HLL = f"""
@@ -754,38 +719,25 @@ _SQL_HLL = f"""
     """
 
 
-# Bisect single retired r7 (r6-green; see ext_sketch_kmv_setops note).
 def ext_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog distinct-count sketch (m=64) with register-wise
-    merge ('(all)' row) and the linear-counting small-range correction
-    via a 63-entry shared-literal ln table; integer-exact harmonic sum.
-    Also graded via the ext_sketch_suite merged row (r5
-    consolidation; r6 bisect single)."""
+    """HyperLogLog distinct-count sketch (m=64) per event type, the
+    register-wise merged '(all)' row, and the exact distinct counts."""
     ev = t(spark, sf_dir, "events")
-    # no DISTINCT before the register build: MAX(rank) over the raw
-    # (type, hv) multiset equals MAX over the distinct set, so the
-    # corpus-wide distinct exchange is pure overhead — the register
-    # groupBy partial-aggregates map-side down to 64 rows per type
-    # (the mergeable-sketch property doing the shuffle's work)
-    h = ev.select("event_type", _hll_hv().alias("hv"))
-    ranked = h.select(F.col("event_type").alias("grp"), *_hll_rank_expr())
     regs = (
-        ranked.groupBy("grp", "idx").agg(F.max("rank").alias("m"))
+        hll_registers(
+            ev.select(F.col("event_type").alias("grp"), "user_id"), "user_id", ["grp"]
+        )
         # the per-type register table (64 rows/type) feeds TWO
         # consumers — its own estimate and the '(all)' register-wise
         # max-merge; without materialization the events scan + register
         # aggregate executes twice. Sketch-sized at any corpus size.
         .localCheckpoint(eager=True)
     )
-    regs_all = regs.groupBy("idx").agg(F.max("m").alias("m")).select(
-        F.lit("(all)").alias("grp"), "idx", "m"
-    )
-    est = _hll_finish(regs).unionAll(_hll_finish(regs_all))
-    # one ROLLUP pass replaces the two separate exact-count
-    # aggregations (per-type + grand total): same values — the
-    # grouping bit identifies the total row, so a hypothetical NULL
-    # event_type still behaves exactly like the old UNION ALL — with
-    # one scan of events instead of two
+    regs_all = hll_merge(regs).select(F.lit("(all)").alias("grp"), "idx", "m")
+    est = hll_estimate(regs, ["grp"]).unionAll(hll_estimate(regs_all, ["grp"]))
+    # one ROLLUP pass computes the per-type and grand-total exact
+    # counts with one scan of events; the grouping bit identifies the
+    # total row, so a NULL event_type stays its own group
     ex = (
         ev.rollup("event_type")
         .agg(
@@ -820,8 +772,6 @@ def ext_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe the top-k exact tokens (deterministic tie-break) through the
 # same hash family.
 
-CM_D = 4
-CM_W = 512
 CM_TOPK = 20
 
 
@@ -857,13 +807,9 @@ _SQL_COUNTMIN = f"""
     """
 
 
-# Bisect single retired r7 (r6-green; see ext_sketch_kmv_setops note).
 def ext_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch (d=4, w=512) with deterministic row-salted md5
-    hashing; counters build from the token frequency table (|vocab|
-    rows, not |corpus|), the sketch is 2048 counters at any data size.
-    Also graded via the ext_sketch_suite merged row (r5
-    consolidation; r6 bisect single)."""
+    """Count-Min sketch (d=4, w=512) of corpus token frequencies,
+    probed with the exact top-20 tokens."""
     docs = t(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
@@ -876,28 +822,9 @@ def ext_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rows — bounded far below the corpus at any scale.
         .localCheckpoint(eager=True)
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("j"), F.col("tok"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % CM_W
-    )
-    expanded = freq.select(
-        "tok", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-    ).withColumn("bucket", bucket)
-    counters = expanded.groupBy("j", "bucket").agg(F.sum("n").alias("c"))
     top = freq.orderBy(F.desc("n"), "tok").limit(CM_TOPK)
-    probes = top.select(
-        "tok", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-    ).withColumn("bucket", bucket)
     return (
-        probes.join(counters, ["j", "bucket"])
-        .groupBy("tok", "n")
-        .agg(F.min("c").cast("long").alias("cm_estimate"))
+        countmin_query(countmin_freq_counters(freq, "tok"), top, "tok")
         .select(
             F.col("tok").alias("token"),
             F.col("n").alias("n_exact"),
@@ -1137,9 +1064,11 @@ BLOOM_FILTERS = (("m13", 1 << 13), ("m20", 1 << 20))
 BLOOM_K = 3
 _SQL_BLOOM_F = ", ".join(f"('{n}', {m})" for n, m in BLOOM_FILTERS)
 
+from marketing_etl_analytics_spark.ext.dedup import (  # noqa: E402
+    shingle_rows as _bloom_shingle_rows,
+)
 from marketing_etl_analytics_spark.suite.ext import (  # noqa: E402
     SQL_SHINGLES as _BLOOM_SQL_SHINGLES,
-    shingle_rows as _bloom_shingle_rows,
 )
 
 _SQL_BLOOM = f"""
@@ -1320,17 +1249,12 @@ def ext_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- merged sketch row (r5 consolidation) ------------------------------------
+# --- merged sketch row ---------------------------------------------------------
 #
-# The three batch sketch singles (KMV set-ops, HLL, Count-Min) were
-# individually r3-green with unchanged code; merging them into ONE
-# wide driver row (the rel_stats_suite precedent from the r4
-# consolidation) keeps all three estimate families under a single
-# CURRENT grading slot — freeing window slots for the r5 additions
-# while every assertion (estimates AND their exact-error columns)
-# survives at the same grain. The streaming twins stream_sketch_hll /
-# stream_sketch_countmin stay standalone (they exercise the
-# foreachBatch merge loop, a different surface).
+# The batch sketch families (HLL, Count-Min, KMV set-ops, quantile
+# histogram) in ONE wide row, each with its exact-error columns at the
+# same grain. The streaming twins live in stream_sketch_suite (they
+# exercise the foreachBatch merge loop, a different surface).
 
 @register(
     "ext_sketch_suite",
@@ -1477,8 +1401,7 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, and idempotent, the streamed estimate is
     bit-identical to the batch sketch regardless of batch count or
     order — the invariant the oracle (batch HLL over the full feed)
-    verifies exactly. Graded via the stream_sketch_suite merged row
-    (r6 consolidation; r4-green as a single, body unchanged)."""
+    verifies exactly. Graded via the stream_sketch_suite merged row."""
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
         run_bounded_stream,
@@ -1489,30 +1412,21 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def start(base: str):
         def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.select(_hll_hv().alias("hv"))
-                .distinct()
-                .select(*_hll_rank_expr())
-                .groupBy("idx")
-                .agg(F.max("rank").alias("m"))
-                .write.mode("append")
-                .parquet(f"{base}/registers")
+            hll_registers(batch_df, "user_id").write.mode("append").parquet(
+                f"{base}/registers"
             )
 
         return start_foreach_batch(users, "append", batch_registers, f"{base}/ckpt")
 
     def result(base: str) -> DataFrame:
-        merged = (
-            spark.read.parquet(f"{base}/registers")
-            .groupBy("idx")
-            .agg(F.max("m").alias("m"))
-            .select(F.lit("(all)").alias("grp"), "idx", "m")
+        merged = hll_merge(spark.read.parquet(f"{base}/registers")).select(
+            F.lit("(all)").alias("grp"), "idx", "m"
         )
         ex = t(spark, sf_dir, "events").agg(
             F.countDistinct("user_id").cast("long").alias("n_exact")
         )
         return (
-            _hll_finish(merged)
+            hll_estimate(merged, ["grp"])
             .crossJoin(F.broadcast(ex))
             .select("grp", "n_exact", "hll_estimate", "n_zero_registers")
         )
@@ -1708,22 +1622,15 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     safety comes from the checkpoint, unlike the HLL's idempotent
     max — the two merge algebras side by side). Probes are the exact
     top-20 users; the oracle is the batch sketch over the full feed.
-    Graded via the stream_sketch_suite merged row (r6 consolidation;
-    r4-green as a single, body unchanged)."""
+    Graded via the stream_sketch_suite merged row."""
     from marketing_etl_analytics_spark.streaming.events_stream import (
         read_events_stream,
         run_bounded_stream,
     )
     from marketing_etl_analytics_spark.streaming.sinks import start_foreach_batch
 
-    users = read_events_stream(spark, sf_dir).select("user_id")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col("v"))), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        % CM_W
+    users = read_events_stream(spark, sf_dir).select(
+        F.col("user_id").cast("string").alias("v")
     )
 
     def start(base: str):
@@ -1732,19 +1639,8 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             # at-least-once, so the partial counters land in a
             # batchId-keyed subdir with OVERWRITE: a replayed batch
             # rewrites its own subdir instead of double-counting
-            (
-                batch_df.select(F.col("user_id").cast("string").alias("v"))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                .select(
-                    "v", "n",
-                    F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j"),
-                )
-                .withColumn("bucket", bucket)
-                .groupBy("j", "bucket")
-                .agg(F.sum("n").alias("c"))
-                .write.mode("overwrite")
-                .parquet(f"{base}/counters/b{batch_id:06d}")
+            countmin_counters(batch_df, "v").write.mode("overwrite").parquet(
+                f"{base}/counters/b{batch_id:06d}"
             )
 
         return start_foreach_batch(users, "append", batch_counters, f"{base}/ckpt")
@@ -1756,21 +1652,16 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("j", "bucket")
             .agg(F.sum("c").alias("c"))
         )
-        ev = t(spark, sf_dir, "events")
         top = (
-            ev.select(F.col("user_id").cast("string").alias("v"))
+            t(spark, sf_dir, "events")
+            .select(F.col("user_id").cast("string").alias("v"))
             .groupBy("v")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .orderBy(F.desc("n"), "v")
             .limit(CM_TOPK)
         )
-        probes = top.select(
-            "v", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-        ).withColumn("bucket", bucket)
         return (
-            probes.join(counters, ["j", "bucket"])
-            .groupBy("v", "n")
-            .agg(F.min("c").cast("long").alias("cm_estimate"))
+            countmin_query(counters, top, "v")
             .select(
                 F.col("v").alias("user_key"),
                 F.col("n").alias("n_exact"),
@@ -1783,16 +1674,12 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_bounded_stream(spark, sf_dir, "events", start, result)
 
 
-# --- merged streaming-sketch row (r6 consolidation) ---------------------------
+# --- merged streaming-sketch row ----------------------------------------------
 #
-# r6 window rotation (VERDICT r5 #3): the two r4-green streaming
-# sketch singles merge into one graded row — the ext_sketch_suite /
-# rel_stats_suite precedent — freeing a window slot while both
-# foreachBatch merge loops (idempotent max vs additive sum, the two
-# mergeable-state algebras) still run for real in the graded path.
-# Both singles stay independently callable above. The merged schema
-# is NULL-free and double-free by construction (the r6 hashing
-# discipline): both families share the (key, est, exact, aux) shape.
+# Both foreachBatch merge loops (idempotent max vs additive sum, the
+# two mergeable-state algebras) in one row. The merged schema is
+# NULL-free and double-free by construction: both families share the
+# (key, est, exact, aux) shape.
 
 @register(
     "stream_sketch_suite",
@@ -1805,9 +1692,8 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ({_SQL_STREAM_CM}) c
     ORDER BY kind, key
     """,
-    doc="Merged streaming-sketch row (r6 consolidation of the two "
-    "r4-green singles stream_sketch_hll / stream_sketch_countmin, "
-    "bodies unchanged): per-micro-batch partial HLL registers "
+    doc="Merged streaming-sketch row (stream_sketch_hll / "
+    "stream_sketch_countmin): per-micro-batch partial HLL registers "
     "(idempotent max-merge) and Count-Min counters (additive "
     "sum-merge, batchId-keyed overwrite for replay safety) maintained "
     "in foreachBatch under availableNow, then merged and verified "

@@ -38,11 +38,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from marketing_etl_analytics_spark.suite.common import t
+from marketing_etl_analytics_spark.ext.dedup import MH_PRIME, N_BANDS
 from marketing_etl_analytics_spark.suite.ext import (
     _SQL_BAND_SIG,
     _SQL_MH_MINS,
-    MH_PRIME,
-    N_BANDS,
     SQL_SHINGLES,
 )
 from marketing_etl_analytics_spark.suite.registry import register
@@ -641,7 +640,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Structured Streaming continuous dedup ingest ----------------------------
 
 # The MinHash band CTEs both ingest oracles start from: the batch twin
-# of suite.ext.minhash_signatures_frame/minhash_bands_frame.
+# of ext.dedup.minhash_signatures_frame/minhash_bands_frame.
 _SQL_INGEST_BANDS = f"""
     WITH shingled AS (
       SELECT doc_id, {SQL_SHINGLES} AS shingles
@@ -717,7 +716,7 @@ def _dedup_ingest(spark: SparkSession, sf_dir: str, compact_index: bool) -> Data
     """,
     doc="Continuous dedup ingest: the document feed streams in, each "
     "micro-batch computes its MinHash band signatures "
-    "(suite.ext.minhash_signatures_frame/minhash_bands_frame — the "
+    "(ext.dedup.minhash_signatures_frame/minhash_bands_frame — the "
     "same pipeline the standing index persists), appends them to the "
     "accumulating signature index, and flags every arriving doc "
     "against ALL docs that ARRIVED before it (standing index "

@@ -199,6 +199,23 @@ def test_semantic_assign_ivf_kmeanspar_whole_path(spark, monkeypatch):
     assert _rows_set(arrow) == _rows_set(frame)
 
 
+@pytest.mark.parametrize("centers_max", [10**9, 0])
+def test_non_integral_key_rejected_on_both_paths(spark, monkeypatch, centers_max):
+    """A string key fails at the boundary with the key's name, whether
+    the Arrow evaluators or the frame fallback would have run."""
+    monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", centers_max)
+    emb = spark.createDataFrame(
+        [(f"v{i}", [float(i % 3 + 1), 1.0, -1.0, 0.5]) for i in range(12)],
+        "doc_key string, embedding array<double>",
+    )
+    with pytest.raises(TypeError, match="doc_key"):
+        curation.semantic_assign(emb, key="doc_key", n_centroids=2)
+    with pytest.raises(TypeError, match="doc_key"):
+        curation.kmeanspar_seeds(
+            emb.withColumn("_n2", F.lit(1.0)), "doc_key", "embedding", 2
+        )
+
+
 @pytest.fixture(scope="module")
 def spark():
     from marketing_etl_analytics_spark.session import get_spark
