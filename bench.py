@@ -88,7 +88,7 @@ def main() -> None:
     # rows: the list exists only to keep shared-artifact builds out of
     # the per-entry figures. Opt out with SPARK_GRAFT_BENCH_NO_WARMUP=1.
     # A targeted probe (SPARK_GRAFT_BENCH_ONLY) warms only the owners
-    # it will time — paying all 16 owners at a 100x-class SF to probe
+    # it will time — paying every owner at a 100x-class SF to probe
     # one entry made targeted large-SF runs impractical.
     _only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     _only_set = (
@@ -100,7 +100,6 @@ def main() -> None:
             # entry -> shared artifact it builds (comment = memo name)
             "ext_dedup_ngram_jaccard",    # ngram_sets (shared shingle index)
             "ext_ann_scan_suite",         # emb_norms
-            "ext_coreset_kcenter",        # emb_norms_lattice
             "ext_sketch_suite",           # kmv_sketch_sets / kmv_hash_sets
             "ext_dedup_containment",      # containment_shingles
             "ext_quality_dsir",           # dsir_feats (memoized bigram stage)

@@ -1,11 +1,11 @@
 """LLM-data-pipeline operator library (engine-facing API).
 
-The one Spark implementation of the sketch, curation and dedup
-operators: deduplication, embedding similarity, text analysis,
-curation, sketches, search and multimodal payload handling. A suite
-entry (``suite/``) calls these, adds its projection and ORDER BY, and
-carries the DuckDB oracle that checks it; nothing here imports
-``suite``.
+The one Spark implementation of the sketch, curation, dedup and
+embedding operators: deduplication, the lattice dot and embedding
+similarity, text analysis, curation, sketches, search and multimodal
+payload handling. A suite entry (``suite/``) calls these, adds its
+projection and ORDER BY, and carries the DuckDB oracle that checks
+it; nothing here imports ``suite``.
 """
 
 from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
@@ -16,7 +16,8 @@ from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
 )
 from marketing_etl_analytics_spark.ext.similarity import (  # noqa: F401
     cosine_topk,
-    cosine_topk_arrow,
+    norm2,
+    sign_bucket_expr,
     with_norm,
     with_sign_bucket,
 )

@@ -11,9 +11,12 @@ corpus builds, idempotent reruns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
+
+from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT
+from marketing_etl_analytics_spark.ext.similarity import sign_bucket_expr
 
 # Max collected center rows for the Arrow/NumPy closure evaluators
 # (r10, guide §4.2): nearest-center assignment, IVF probing, and
@@ -37,6 +40,15 @@ def _require_integral_key(df: DataFrame, key: str) -> None:
         raise TypeError(
             f"key column {key!r} must be an integral type, got {dtype.simpleString()}"
         )
+
+
+def _non_null_vec(vec: str) -> Column:
+    """``vec``, failing the query on a null vector with the column's
+    name: the Arrow evaluators and the frame fallback read this same
+    projection, so they reject a null alike."""
+    return F.when(
+        F.col(vec).isNull(), F.raise_error(f"null vector in column {vec!r}")
+    ).otherwise(F.col(vec))
 
 
 # --- model-based quality scoring ---------------------------------------------
@@ -256,25 +268,6 @@ def farthest_first_from_pool(pool: list[tuple], k: int) -> list:
 KMPAR_ROUNDS = 3
 
 
-def _dot_expr() -> str:
-    """Exact dot product template on the 1e-12 integer lattice.
-
-    Per-term FLOOR(x*y * 1e12 + 0.5) on identical IEEE doubles is
-    engine-invariant, and BIGINT addition is exact and order-free —
-    the SPARK_DOT/SQL_DOT discipline (suite/ext.py, hardened fc3b048)
-    that the suite oracles for the semantic-dedup entries already
-    replay. The previous per-term CAST(... AS DECIMAL(38,12)) snap was
-    both slower (interpreted BigDecimal per term inside the
-    higher-order function) and the one place the engine's formula
-    differed from its own oracle's."""
-    return (
-        "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-        " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-        " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-        " AS DOUBLE) / 1e12)"
-    )
-
-
 def kmeanspar_seeds(
     b: DataFrame,
     key: str,
@@ -302,7 +295,7 @@ def kmeanspar_seeds(
     )
     base = b.select(
         F.col(key).alias("_k"),
-        F.col(vec).alias("_v"),
+        _non_null_vec(vec).alias("_v"),
         F.col("_n2").alias("_vn2"),
         u.alias("_u"),
         h.alias("_h"),
@@ -320,7 +313,7 @@ def kmeanspar_seeds(
     # distance 1 instead of an ANSI divide-by-zero; mirrored in the
     # suite oracle (_sql_kmeanspar_ctes)
     cos = F.coalesce(
-        F.expr(_dot_expr().format(a="_v", b="_ce"))
+        F.expr(SPARK_DOT.format(a="_v", b="_ce"))
         / F.nullif(F.sqrt(F.col("_vn2") * F.col("_cn2")), F.lit(0.0)),
         F.lit(0.0),
     )
@@ -526,22 +519,19 @@ def semantic_assign(
     argmax on the graded corpora is pinned by pytest.
     """
     _require_integral_key(df, key)
-    dot = _dot_expr()  # 1e-12 integer-lattice dot (engine-invariant)
     # refine bits come from dims 9..16 when they exist; clamped to the
     # vector's width (sequence counts DOWN past the end, and ANSI-mode
     # element_at throws on out-of-range — both guarded), degrading to
     # sub=0 (no refine) for vectors narrower than 9 dims
     sub = (
         f"CASE WHEN size({vec}) >= 9 THEN "
-        f"CAST(aggregate(sequence(9, least(16, size({vec}))), CAST(0 AS BIGINT),"
-        f" (acc, i) -> acc + CASE WHEN CAST(element_at({vec}, i) AS DOUBLE) > 0"
-        " THEN CAST(pow(2, i - 9) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END"
+        + sign_bucket_expr(vec, 9, f"least(16, size({vec}))")
+        + " ELSE CAST(0 AS BIGINT) END"
     )
-    b = df.select(
+    b = df.select(F.col(key), _non_null_vec(vec).alias(vec)).select(
         F.col(key),
         F.col(vec),
-        F.expr(dot.format(a=vec, b=vec)).alias("_n2"),
+        F.expr(SPARK_DOT.format(a=vec, b=vec)).alias("_n2"),
         F.expr(sub).alias("_sub"),
     )
     cent_cols = [
@@ -550,7 +540,7 @@ def semantic_assign(
         F.col("_n2").alias("_cn2"),
     ]
     if seeding == "farthest":
-        pool = quantize_pool(df, key, vec, pool_factor * n_centroids)
+        pool = quantize_pool(b, key, vec, pool_factor * n_centroids)
         seed_keys = farthest_first_from_pool(pool, n_centroids)
         cent = (
             b.filter(F.col(key).isin(seed_keys)).select(*cent_cols)
@@ -592,7 +582,9 @@ def semantic_assign(
         )
     else:
         raise ValueError(f"unknown seeding mode: {seeding!r}")
-    cos_c = F.expr(dot.format(a=vec, b="_ce")) / F.sqrt(F.col("_n2") * F.col("_cn2"))
+    cos_c = F.expr(SPARK_DOT.format(a=vec, b="_ce")) / F.sqrt(
+        F.col("_n2") * F.col("_cn2")
+    )
     # Arrow/NumPy closure path (r10, guide §4.2): with a planning-
     # sized center set, the probe/argmax dots run vectorized per
     # Arrow batch — no n*k crossJoin rows, no rank-window exchange.
@@ -669,7 +661,7 @@ def semantic_assign(
                 F.col("_n2").alias("_sn2"),
             )
         # centroid -> home super-cluster (k x sqrt(k), both broadcast)
-        cos_cs = F.expr(dot.format(a="_ce", b="_se")) / F.sqrt(
+        cos_cs = F.expr(SPARK_DOT.format(a="_ce", b="_se")) / F.sqrt(
             F.col("_cn2") * F.col("_sn2")
         )
         wcs = Window.partitionBy("_cid").orderBy(F.desc("_ccs"), F.asc("_sid"))
@@ -706,7 +698,7 @@ def semantic_assign(
                     "cluster", keep=[key, "_sub"],
                 ).select(key, "cluster", "_sub")
         else:
-            cos_ds = F.expr(dot.format(a=vec, b="_se")) / F.sqrt(
+            cos_ds = F.expr(SPARK_DOT.format(a=vec, b="_se")) / F.sqrt(
                 F.col("_n2") * F.col("_sn2")
             )
             wds = Window.partitionBy(key).orderBy(
@@ -790,7 +782,6 @@ def semantic_dedup(
     the index is the amortized artifact; assignment parameters are
     then taken from it, not from this call's arguments).
     """
-    dot = _dot_expr()  # 1e-12 integer-lattice dot (engine-invariant)
     if keyed is None:
         keyed = semantic_assign(
             df,
@@ -804,7 +795,7 @@ def semantic_dedup(
             n_probe=n_probe,
         )
     b = df.select(
-        F.col(key), F.col(vec), F.expr(dot.format(a=vec, b=vec)).alias("_n2")
+        F.col(key), F.col(vec), F.expr(SPARK_DOT.format(a=vec, b=vec)).alias("_n2")
     )
     m = keyed.join(b.select(key, vec, "_n2"), key)
     mu = m.select(

@@ -1,11 +1,24 @@
-"""Embedding preprocessing: L2 normalization, int8 quantization, and
-Johnson-Lindenstrauss random sign projection.
+"""The 1e-12 lattice dot product and the embedding preprocessing built
+on it: L2 normalization, int8 quantization, and Johnson-Lindenstrauss
+random sign projection.
 
-The vector-column maintenance steps a training/serving pipeline runs
-between "embeddings landed" and "ANN index built":
+**The lattice dot.** :data:`SPARK_DOT_L` is the one Spark spelling of
+the dot product every embedding operator uses: each elementwise
+product is snapped to the 1e-12 INTEGER lattice,
+``floor(x * y * 1e12 + 0.5)``, and summed as BIGINT. Those are IEEE
+ops that are bit-identical on identical inputs in every engine, and
+BIGINT addition is exact and order-free, so the sum cannot diverge
+at any term count (the suite oracles replay it as ``SQL_DOT``).
+:data:`SPARK_DOT` divides the same sum once by 1e12. The NumPy
+evaluators below (:func:`arrow_lattice_dots` and the corpus x centers
+evaluators) do the same ops on the same operands and are
+bit-identical to it.
 
-- **L2 normalize** — cosine becomes plain dot product downstream;
-  every ANN entry in the suite assumes it.
+**Preprocessing** — the vector-column maintenance steps a
+training/serving pipeline runs between "embeddings landed" and "ANN
+index built":
+
+- **L2 normalize** — cosine becomes plain dot product downstream.
 - **int8 symmetric quantization** (per-vector scale = max|v|/127) —
   the 4x memory/IO reduction that makes a 100 TB vector corpus fit an
   ANN serving tier; reconstruction is ``code * scale``.
@@ -15,28 +28,18 @@ between "embeddings landed" and "ANN index built":
   (E[||Pv||^2] = ||v||^2 with the 1/sqrt(p) scaling); the cheap
   coarse-filter geometry for routing/bucketing before exact re-rank.
 
-Determinism contract (the property the suite oracle grades): the sign
-matrix is **generated once in Python from md5 and inlined as literal
-'0'/'1' strings** into both engines' SQL, so there is no cross-engine
-RNG to disagree; sums of products are snapped per-term to the 1e-12
-INTEGER lattice — ``floor(term * 1e12 + 0.5)`` summed as BIGINT (the
-SPARK_DOT discipline, see :func:`sign_dot_expr` for the rationale —
-exact, order-free, engine-invariant); quantization rounds via
-``floor(x + 0.5)`` (floor is
-exact on identical IEEE doubles in both engines, so no
-HALF_UP-vs-banker's divergence).
+Determinism contract: the sign matrix is **generated once in Python
+from md5 and inlined as literal '0'/'1' strings** into both engines'
+SQL, so there is no cross-engine RNG to disagree; signed sums use the
+lattice (:func:`sign_dot_expr`); quantization rounds via
+``floor(x + 0.5)`` (exact on identical IEEE doubles in both engines,
+so no HALF_UP-vs-banker's divergence).
 
-Two execution tiers, the cosine_topk / cosine_topk_arrow precedent:
-
-- :func:`project_signs` / :func:`quantize_int8` — JVM expression
-  forms (flat ``aggregate()`` / ``transform()`` higher-order
-  functions over the array column): zero-shuffle per-row map, exact
-  decimal arithmetic, what the graded suite entry uses.
-- :func:`project_signs_arrow` — numpy/BLAS twin via mapInPandas: the
-  whole projection is ONE (batch x d) @ (d x p) matmul per Arrow
-  batch. Float64 matmul agrees with the decimal path to ~1e-12;
-  rank/bucket decisions downstream are made on coarse quantities, and
-  the equivalence is pinned by ``tests/test_embedding_api.py``.
+The projection has two execution forms: :func:`project_signs` (JVM
+higher-order functions over the array column, what the graded suite
+entry uses) and :func:`project_signs_arrow` (one (batch x d) @ (d x p)
+matmul per Arrow batch; agrees to ~1e-12, pinned by
+``tests/test_embedding_api.py``).
 
 No reference-repo parity: the reference (a Postgres marketing
 warehouse, see SURVEY.md) has no vector surface; this module is part
@@ -51,17 +54,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "SPARK_DOT",
+    "SPARK_DOT_L",
     "sign_matrix",
     "sign_dot_expr",
     "project_signs",
     "project_signs_arrow",
     "quantize_int8",
     "arrow_lattice_dots",
-    "arrow_lattice_norms",
     "arrow_nearest_center",
     "arrow_min_center_dist",
     "arrow_ivf_assign",
 ]
+
+# Lattice dot of the array columns {a} and {b}, in BIGINT lattice units.
+SPARK_DOT_L = (
+    "aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
+    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
+    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
+)
+# The same sum as a double: one division of the exact lattice integer.
+SPARK_DOT = "(CAST(" + SPARK_DOT_L + " AS DOUBLE) / 1e12)"
 
 
 def sign_matrix(d: int, p: int, tag: str = "jl") -> list[str]:
@@ -272,8 +285,7 @@ def arrow_lattice_dots(
                 # r9 #1) before the reshape
                 ua = _np_vecs(batch, a, m)
                 va = _np_vecs(batch, b, m)
-                s = np.floor(ua * va * 1e12 + 0.5).astype(np.int64).sum(axis=1)
-                dots = pa.array(s / 1e12, pa.float64())
+                dots = pa.array(_np_lattice_sum(ua * va), pa.float64())
             yield pa.RecordBatch.from_arrays(cols + [dots], names=names)
 
     return df.mapInArrow(batches, out_schema)
@@ -319,11 +331,18 @@ def _np_vecs(batch, name: str, m: int):
     return np.asarray(col.flatten(), dtype=np.float64).reshape(m, -1)
 
 
+def _np_lattice_sum(prod):
+    """SPARK_DOT over the last axis of a float64 product array: each
+    term floor(p*1e12 + 0.5) summed as int64, divided once by 1e12."""
+    import numpy as np
+
+    return np.floor(prod * 1e12 + 0.5).astype(np.int64).sum(axis=-1) / 1e12
+
+
 def _np_lattice_dot_matrix(vm, cm, chunk_bytes: int = 32 << 20):
-    """(m,d) x (k,d) -> (m,k) float64 lattice dots: per-term
-    floor(x*y*1e12 + 0.5) summed as int64, divided once by 1e12 — the
-    SPARK_DOT value for every (row, center) pair. Chunked over centers
-    so the (m, chunk, d) intermediate stays bounded."""
+    """(m,d) x (k,d) -> (m,k) float64 lattice dots — the SPARK_DOT
+    value for every (row, center) pair. Chunked over centers so the
+    (m, chunk, d) intermediate stays bounded."""
     import numpy as np
 
     m, d = vm.shape
@@ -331,9 +350,8 @@ def _np_lattice_dot_matrix(vm, cm, chunk_bytes: int = 32 << 20):
     out = np.empty((m, k), dtype=np.float64)
     step = max(1, int(chunk_bytes // max(1, m * d * 8)))
     for s in range(0, k, step):
-        prod = vm[:, None, :] * cm[None, s:s + step, :]
-        out[:, s:s + step] = (
-            np.floor(prod * 1e12 + 0.5).astype(np.int64).sum(axis=2) / 1e12
+        out[:, s:s + step] = _np_lattice_sum(
+            vm[:, None, :] * cm[None, s:s + step, :]
         )
     return out
 
@@ -371,35 +389,6 @@ def _center_arrays(centers):
     cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     cn2 = np.array([float(r[2]) for r in rows], dtype=np.float64)
     return cids, cmat, cn2
-
-
-def arrow_lattice_norms(df: DataFrame, vec: str, out: str = "n2") -> DataFrame:
-    """Append the lattice self-dot (SPARK_DOT(vec, vec)) as ``out``,
-    keeping every input column — the memoized norm-table build, one
-    vectorized corpus pass instead of n*d interpreted lambda steps."""
-    import numpy as np
-    import pyarrow as pa
-
-    fields = list(df.schema.fields)
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"`{out}` double"]
-    )
-    names = [f.name for f in fields] + [out]
-
-    def batches(it):
-        for batch in it:
-            m = len(batch)
-            cols = [batch.column(f.name) for f in fields]
-            if m == 0:
-                n2 = pa.array(np.zeros(0), pa.float64())
-            else:
-                vm = _np_vecs(batch, vec, m)
-                s = np.floor(vm * vm * 1e12 + 0.5).astype(np.int64).sum(axis=1)
-                n2 = pa.array(s / 1e12, pa.float64())
-            yield pa.RecordBatch.from_arrays(cols + [n2], names=names)
-
-    return df.mapInArrow(batches, out_schema)
 
 
 def arrow_nearest_center(

@@ -1,9 +1,24 @@
-"""Embedding similarity search.
+"""Embedding similarity search on the 1e-12 lattice dot.
 
-Norms are computed once per vector (``with_norm``) — never per pair.
-Brute force is a broadcast of the (small) query side against the full
-candidate set; the scale path buckets both sides by sign-LSH so the
-join shuffles on the bucket key instead of producing all pairs.
+One implementation of each operator the similarity entries are built
+from:
+
+- :func:`with_norm` appends ``n2l``, the squared norm in BIGINT
+  lattice units (``SPARK_DOT_L(vec, vec)``). A corpus stores it next
+  to the vector, so no pair ever recomputes a norm. :func:`norm2` is
+  the double view, ``CAST(n2l AS DOUBLE) / 1e12``, bit-identical to
+  ``SPARK_DOT(vec, vec)``.
+- :func:`sign_bucket_expr` is the sign-LSH bucket over a run of
+  dimensions; :func:`with_sign_bucket` appends it over the first
+  ``bits``.
+- :func:`cosine_topk` scores ``SPARK_DOT / sqrt(nq * nc)`` with a
+  rank window: brute force is a broadcast of the (small) query side
+  against every candidate, and the bucketed scale path joins on the
+  sign bucket instead of producing all pairs.
+
+Every value is the one the suite's DuckDB oracles replay (``SQL_DOT``,
+``SQL_BUCKET``), so a suite entry adds only its projection, rounding
+and ORDER BY.
 """
 
 from __future__ import annotations
@@ -11,37 +26,39 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a: Column, b: Column) -> Column:
-    """Double-precision sequential dot product (JVM-side, no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT, SPARK_DOT_L
 
 
 def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.sqrt(_dot(F.col(vec), F.col(vec))))
+    """Append ``n2l``: the lattice squared norm of ``vec`` (BIGINT)."""
+    return df.withColumn("n2l", F.expr(SPARK_DOT_L.format(a=vec, b=vec)))
 
 
-def with_sign_bucket(df: DataFrame, vec: str = "embedding", bits: int = 8) -> DataFrame:
-    """Sign-LSH bucket from the first ``bits`` components (2^bits buckets).
+def norm2(n2l: str = "n2l") -> Column:
+    """The double squared norm of a lattice norm column."""
+    return F.col(n2l).cast("double") / F.lit(1e12)
+
+
+def sign_bucket_expr(vec: str, first: int, last: int | str) -> str:
+    """Spark SQL for the sign-LSH bucket over dims ``first..last``
+    (1-based): bit ``i - first`` is set iff ``vec[i] > 0``. ``last``
+    may be an SQL expression (a clamp to the vector's width).
 
     For real workloads the hyperplanes would be random projections;
     component signs are the deterministic, test-friendly variant with
-    the same plan shape.
-    """
-    bucket = F.aggregate(
-        F.sequence(F.lit(1), F.lit(bits)),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc
-        + F.when(
-            F.element_at(F.col(vec), i).cast("double") > 0,
-            F.pow(F.lit(2.0), i.cast("double") - 1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
+    the same plan shape."""
+    return (
+        f"CAST(aggregate(sequence({first}, {last}), CAST(0 AS BIGINT),"
+        f" (acc, i) -> acc + CASE WHEN CAST(element_at({vec}, i) AS DOUBLE) > 0"
+        f" THEN CAST(pow(2, i - {first}) AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        " AS BIGINT)"
     )
-    return df.withColumn("bucket", bucket)
+
+
+def with_sign_bucket(df: DataFrame, vec: str = "embedding", bits: int = 8) -> DataFrame:
+    """Append ``bucket``: the sign-LSH bucket of the first ``bits``
+    components (2^bits buckets)."""
+    return df.withColumn("bucket", F.expr(sign_bucket_expr(vec, 1, bits)))
 
 
 def cosine_topk(
@@ -53,120 +70,37 @@ def cosine_topk(
     bucketed: bool = False,
     bucket_bits: int = 8,
 ) -> DataFrame:
-    """Top-k cosine neighbors per query vector.
+    """Top-k cosine neighbors per query vector: (qid, cid, cosine, rn),
+    plus ``bucket`` when ``bucketed``.
 
-    candidates/queries: DataFrames with (key, vec) columns. With
-    ``bucketed=True`` both sides are sign-bucketed and the join runs
-    per bucket (approximate; misses cross-bucket neighbors — that is
-    the recall/cost trade).
+    candidates/queries: frames with (key, vec, n2l) columns, the norm
+    from :func:`with_norm`. The cosine is ``SPARK_DOT(qe, ce) /
+    sqrt(nq * nc)`` on the double norms; ties rank by ascending cid.
+    With ``bucketed=True`` both sides are sign-bucketed on the first
+    ``bucket_bits`` dims and the join runs per bucket (approximate;
+    misses cross-bucket neighbors — that is the recall/cost trade).
 
-    Zero-norm vectors are dropped from BOTH sides before scoring
-    (cosine is undefined for them; without the filter the JVM ranks
-    the resulting NaN first while numpy's lexsort ranks it last, so
-    the two paths would diverge on degenerate input). The Arrow twin
-    applies the same filter.
+    Zero-norm vectors are dropped from BOTH sides before scoring:
+    cosine is undefined for them.
     """
-    q = queries.select(
-        F.col(key).alias("qid"), F.col(vec).alias("qe")
-    ).filter(_dot(F.col("qe"), F.col("qe")) > 0)
-    c = candidates.select(F.col(key).alias("cid"), F.col(vec).alias("ce")).filter(
-        _dot(F.col("ce"), F.col("ce")) > 0
-    )
+
+    def side(df: DataFrame, id_: str, e: str, n: str) -> DataFrame:
+        cols = [F.col(key).alias(id_), F.col(vec).alias(e), norm2().alias(n)]
+        if bucketed:
+            cols.append(F.expr(sign_bucket_expr(vec, 1, bucket_bits)).alias("bucket"))
+        return df.filter(F.col("n2l") > 0).select(*cols)
+
+    q = side(queries, "qid", "qe", "nq")
+    c = side(candidates, "cid", "ce", "nc")
     if bucketed:
-        q = with_sign_bucket(q, "qe", bucket_bits)
-        c = with_sign_bucket(c, "ce", bucket_bits)
         joined = c.join(F.broadcast(q), "bucket")
     else:
         joined = c.crossJoin(F.broadcast(q))
+    cos = F.expr(SPARK_DOT.format(a="qe", b="ce")) / F.sqrt(F.col("nq") * F.col("nc"))
+    # cosine as a COLUMN so the rank window orders by an attribute
+    # (one evaluation per pair, none per SortOrder comparison)
     pairs = joined.filter(F.col("qid") != F.col("cid")).select(
-        "qid",
-        "cid",
-        (
-            _dot(F.col("qe"), F.col("ce"))
-            / (
-                F.sqrt(_dot(F.col("qe"), F.col("qe")))
-                * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-            )
-        ).alias("cosine"),
+        "qid", "cid", *(["bucket"] if bucketed else []), cos.alias("cosine")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-
-def cosine_topk_arrow(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: the numpy/BLAS twin of
-    ``cosine_topk``.
-
-    The query side is collected once (queries are the SMALL side by
-    contract — the same assumption that makes ``cosine_topk``
-    broadcast it), row-normalized into a dense matrix, and broadcast
-    to executors; each Arrow batch of candidates is normalized and
-    scored against ALL queries in ONE matmul, then reduced to a
-    per-batch local top-k so the shuffle carries at most
-    k * n_queries rows per batch — the classic partial-top-k combine.
-    A final per-query window merges the batch winners.
-
-    Same contract as cosine_topk(bucketed=False) — including the
-    zero-norm-rows-dropped rule, applied here on both the collected
-    query matrix and each candidate batch; ~10-50x its
-    per-pair cost at wide vectors because the JVM expression
-    evaluates the dot per pair while BLAS does a blocked matmul.
-    Scores are float64 matmul sums (pairwise summation) — equal to
-    the JVM's sequential double sum to ~1e-12; the pytest pins
-    rank-for-rank agreement on the graded corpora.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(key, vec).collect()
-    qids = np.array([r[key] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[vec]) for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(qm, axis=1)
-    qids, qm, q_norm = qids[q_norm > 0], qm[q_norm > 0], q_norm[q_norm > 0]
-    qm = qm / q_norm[:, None]
-    bq = candidates.sparkSession.sparkContext.broadcast((qids, qm))
-
-    def score(batches):
-        qids, qm = bq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[key].to_numpy(dtype=np.int64)
-            cm = np.array(pdf[vec].tolist(), dtype=np.float64)
-            c_norm = np.linalg.norm(cm, axis=1)
-            cids, cm = cids[c_norm > 0], cm[c_norm > 0]
-            if not len(cids):
-                continue
-            cm = cm / c_norm[c_norm > 0][:, None]
-            s = cm @ qm.T  # (n_candidates, n_queries)
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(qids)):
-                col = s[:, j]
-                mask = cids != qids[j]
-                mc, ms = cids[mask], col[mask]
-                if not len(mc):
-                    continue
-                top = min(k, len(mc))
-                # batch-local top-k under the SAME total order as the
-                # final window (score desc, cid asc): argpartition on
-                # score alone would break exact-score ties (common —
-                # clone embeddings) arbitrarily at the k-boundary,
-                # making results partition-dependent
-                order = np.lexsort((mc, -ms))
-                sel = order[:top]
-                out_q.extend([qids[j]] * len(sel))
-                out_c.extend(mc[sel].tolist())
-                out_s.extend(ms[sel].tolist())
-            yield pd.DataFrame({"qid": out_q, "cid": out_c, "cosine": out_s})
-
-    local = candidates.select(key, vec).mapInPandas(
-        score, "qid long, cid long, cosine double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return local.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)

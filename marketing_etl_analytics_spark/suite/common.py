@@ -209,13 +209,6 @@ def dsum(col: Column, ndigits: int = 2) -> Column:
     return F.round(F.sum(col), ndigits).cast("double")
 
 
-def dcol(col: Column) -> Column:
-    """Row-level exact decimal emitted as DOUBLE — no rounding, so no
-    tie-breaking divergence; decimal->double conversion is exact-value
-    identical in both engines."""
-    return col.cast("double")
-
-
 def lsum(col: Column | str) -> Column:
     """SUM of an integral column, emitted as BIGINT."""
     c = F.col(col) if isinstance(col, str) else col

@@ -15,20 +15,21 @@ no shuffle), candidate generation shuffles on (band, signature) or
 Portability notes (Spark <-> DuckDB):
 - md5(string) is the shared deterministic hash.
 - dot products snap each elementwise product to the 1e-12 INTEGER
-  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT /
-  SQL_DOT below) — composed only of IEEE ops that are bit-identical
-  on identical inputs in every engine, so the order-free sum cannot
-  diverge at any term count. (The earlier per-term DECIMAL(38,12)
-  cast left one engine-specific tie-rounding in the chain — Java
-  BigDecimal HALF_UP vs DuckDB scaled multiply — which the sf100b
-  sweep caught flipping once in 128 M terms; fc3b048. Float32 inputs
-  widen to double exactly; a single product of two float32 fits
-  double's 53-bit mantissa exactly.)
+  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT
+  (ext.embedding.SPARK_DOT; SQL_DOT below is its oracle twin) —
+  composed only of IEEE ops that are bit-identical on identical
+  inputs in every engine, so the order-free sum cannot diverge at any
+  term count. (The earlier per-term DECIMAL(38,12) cast left one
+  engine-specific tie-rounding in the chain — Java BigDecimal HALF_UP
+  vs DuckDB scaled multiply — which the sf100b sweep caught flipping
+  once in 128 M terms; fc3b048. Float32 inputs widen to double
+  exactly; a single product of two float32 fits double's 53-bit
+  mantissa exactly.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext.dedup import (
@@ -45,6 +46,11 @@ from marketing_etl_analytics_spark.ext.dedup import (
     minhash_bands_frame,
     minhash_signatures_frame,
     shingle_rows,
+)
+from marketing_etl_analytics_spark.ext.similarity import (
+    cosine_topk,
+    norm2,
+    with_norm,
 )
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
@@ -351,42 +357,36 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding similarity: brute-force cosine top-k --------------------------
 
-# Per-term 1e-12 INTEGER lattice (same hardening as ext/embedding.py
-# sign_dot_expr, e311c9c): floor(x*y * 1e12 + 0.5) on identical IEEE
-# doubles is engine-invariant, and BIGINT addition is exact and
-# order-free. The previous per-term CAST(... AS DECIMAL(38,12)) snap
-# left one engine-specific operation in the chain — Java BigDecimal
-# HALF_UP vs DuckDB scaled-multiply can tie-round a term 1e-12 apart,
-# which flipped a 6-dp l2_norm at the 2 M-vector 1000x sweep
-# (ext_embed_transform, vec 1032038) exactly as it flipped a
-# projection at the 200 k-vector sf10 sweep before r6.
-SPARK_DOT = (
-    "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-    " AS DOUBLE) / 1e12)"
-)
+# DuckDB twin of ext.embedding.SPARK_DOT (the 1e-12 lattice dot).
 SQL_DOT = (
     "(CAST(list_sum(list_transform(generate_series(1, len({a})),"
     " i -> CAST(FLOOR(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)"
     " * 1e12 + 0.5) AS BIGINT))) AS DOUBLE) / 1e12)"
 )
 
+
+def embedding_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, n2l): the embeddings with their BIGINT
+    lattice squared norms (``with_norm``), memoized — the stored
+    vector index every ANN/near-dup entry reads (norms computed once
+    at ingest, never per query or per pair)."""
+    return memo_df(
+        spark,
+        sf_dir,
+        "emb_norms",
+        lambda: with_norm(t(spark, sf_dir, "embeddings")).select(
+            "vec_id", "embedding", "n2l"
+        ),
+    )
+
+
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, embedding, n2) squared-norm table, memoized — every
-    ANN/near-dup entry needs the norms, and the exact-decimal dot
-    product is the expensive part; at scale this is the stored vector
-    index (norms computed at ingest, not per query)."""
-
-    def build() -> DataFrame:
-        emb = t(spark, sf_dir, "embeddings")
-        return emb.select(
-            "vec_id",
-            "embedding",
-            F.expr(SPARK_DOT.format(a="embedding", b="embedding")).alias("n2"),
-        )
-
-    return memo_df(spark, sf_dir, "emb_norms", build)
+    """(vec_id, embedding, n2) over :func:`embedding_index`, ``n2`` the
+    double squared norm — bit-identical to SPARK_DOT(embedding,
+    embedding)."""
+    return embedding_index(spark, sf_dir).select(
+        "vec_id", "embedding", norm2().alias("n2")
+    )
 
 
 _SQL_ANN_TOPK = f"""
@@ -412,43 +412,14 @@ _SQL_ANN_TOPK = f"""
     """
 
 
-# Brute-force cosine top-5 for 10 query vectors: exact-decimal dot
-# products (order-free), window top-k. The baseline ANN path; at scale
-# the candidate set comes from ext_ann_lsh_bucketed. Graded via the
-# merged ext_ann_scan_suite row (r7 consolidation); callable
-# standalone.
+# Brute-force cosine top-5 for 10 query vectors: the library's
+# cosine_topk on the lattice dot. The baseline ANN path; at scale the
+# candidate set comes from ext_ann_lsh_bucketed. Graded via the merged
+# ext_ann_scan_suite row; callable standalone.
 def ext_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # squared norms once per vector (N + K evaluations), not once per
-    # pair (3·N·K) — the dot-product lambda is the expensive part
-    b = embedding_norms(spark, sf_dir)
-    q = b.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("nq"),
-    )
-    c = b.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("n2").alias("nc"),
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("qid") != F.col("cid"))
-        .select(
-            "qid", "cid",
-            F.expr(SPARK_DOT.format(a="qe", b="ce")).alias("dot"),
-            "nq", "nc",
-        )
-    )
-    # cosine as a COLUMN so the rank window orders by an attribute
-    # (one evaluation per row, none per SortOrder comparison)
-    cos_raw = F.col("dot") / F.sqrt(F.col("nq") * F.col("nc"))
-    w = Window.partitionBy("qid").orderBy(F.desc("_cos"), F.asc("cid"))
-    return (
-        pairs.withColumn("_cos", cos_raw)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("qid", "cid", pround(F.col("_cos"), 6).alias("cosine"), "rn")
+    b = embedding_index(spark, sf_dir)
+    return cosine_topk(b, b.filter(F.col("vec_id") < 10), k=5).select(
+        "qid", "cid", pround(F.col("cosine"), 6).alias("cosine"), "rn"
     )
 
 
@@ -484,49 +455,14 @@ _SQL_ANN_LSH = f"""
 
 # Sign-LSH bucketing (first 8 dims -> 256 buckets): neighbor search
 # joins on the bucket key instead of all pairs — the IVF/LSH scale
-# path for ANN. Graded via the merged ext_ann_scan_suite row (r7
-# consolidation); callable standalone.
+# path for ANN. Graded via the merged ext_ann_scan_suite row; callable
+# standalone.
 def ext_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bucket = F.expr(
-        "CAST(aggregate(sequence(1, 8), CAST(0 AS BIGINT),"
-        " (acc, i) -> acc + CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) > 0"
-        " THEN CAST(pow(2, i - 1) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-    )
-    b = embedding_norms(spark, sf_dir).select(
-        "vec_id", "embedding", "n2", bucket.alias("bucket")
-    )
-    q = b.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("nq"),
-        "bucket",
-    )
-    c = b.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("n2").alias("nc"),
-        "bucket",
-    )
-    pairs = (
-        c.join(F.broadcast(q), ["bucket"])
-        .filter(F.col("qid") != F.col("cid"))
-        .select(
-            "qid", "cid", "bucket",
-            F.expr(SPARK_DOT.format(a="qe", b="ce")).alias("dot"),
-            "nq", "nc",
-        )
-    )
-    # cosine as a COLUMN for the rank window (same rationale as the
-    # brute-force branch above)
-    cos_raw = F.col("dot") / F.sqrt(F.col("nq") * F.col("nc"))
-    w = Window.partitionBy("qid").orderBy(F.desc("_cos"), F.asc("cid"))
-    return (
-        pairs.withColumn("_cos", cos_raw)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "qid", "cid", "bucket", pround(F.col("_cos"), 6).alias("cosine"), "rn"
-        )
+    b = embedding_index(spark, sf_dir)
+    return cosine_topk(
+        b, b.filter(F.col("vec_id") < 20), k=3, bucketed=True, bucket_bits=8
+    ).select(
+        "qid", "cid", "bucket", pround(F.col("cosine"), 6).alias("cosine"), "rn"
     )
 
 

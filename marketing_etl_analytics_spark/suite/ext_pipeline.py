@@ -49,9 +49,11 @@ from marketing_etl_analytics_spark.ext.dedup import (
     cap_lsh_buckets,
     shingle_rows,
 )
+from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT
 from marketing_etl_analytics_spark.suite.ext import (
     SQL_DOT,
     SQL_SHINGLES,
+    embedding_norms,
     sql_cap_lsh_buckets,
 )
 from marketing_etl_analytics_spark.suite.registry import register
@@ -1108,7 +1110,6 @@ _HYB_QVEC = 100  # query = embedding of vec_id 100 (the ANN convention)
 )
 def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketing_etl_analytics_spark.ext.search import bm25_search
-    from marketing_etl_analytics_spark.suite.ext import SPARK_DOT
 
     bm = bm25_search(
         spark,
@@ -1124,12 +1125,7 @@ def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rank_bm25"),
     )
-    emb = t(spark, sf_dir, "embeddings")
-    n2 = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(SPARK_DOT.format(a="embedding", b="embedding")).alias("n2"),
-    )
+    n2 = embedding_norms(spark, sf_dir)
     q = n2.filter(F.col("vec_id") == _HYB_QVEC).select(
         F.col("embedding").alias("qe"), F.col("n2").alias("qn2")
     )

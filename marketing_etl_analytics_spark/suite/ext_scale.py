@@ -15,13 +15,14 @@ Scale shapes:
 - Embedding near-dup + IVF: every vector's squared norm is computed
   once; candidate generation joins on the bucket / probed-centroid
   key. Dot products snap elementwise products to the 1e-12 INTEGER
-  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT /
-  SQL_DOT in suite.ext, hardened fc3b048 after the sf100b sweep
-  caught a per-term DECIMAL(38,12) cast tie-rounding once in 128 M
-  terms) — pure IEEE ops on identical doubles, so the sum is
-  engine-invariant at any term count and ranking order is
-  engine-independent. (SPARK_DOT_DEC below stays genuinely decimal:
-  PQ ADC sums are kept IN decimal end-to-end, no double cast.)
+  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT
+  (ext.embedding.SPARK_DOT / SQL_DOT in suite.ext, hardened fc3b048
+  after the sf100b sweep caught a per-term DECIMAL(38,12) cast
+  tie-rounding once in 128 M terms) — pure IEEE ops on identical
+  doubles, so the sum is engine-invariant at any term count and
+  ranking order is engine-independent. (SPARK_DOT_DEC below stays
+  genuinely decimal: PQ ADC sums are kept IN decimal end-to-end, no
+  double cast.)
 - Sessionization: one shuffle on user_id; lag + running-sum windows
   within the partition (the classic gaps-and-islands plan).
 """
@@ -44,8 +45,9 @@ from marketing_etl_analytics_spark.suite.common import (
     t,
 )
 from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets
+from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT
+from marketing_etl_analytics_spark.ext.similarity import sign_bucket_expr
 from marketing_etl_analytics_spark.suite.ext import (
-    SPARK_DOT,
     SQL_DOT,
     embedding_norms,
     minhash_bands,
@@ -389,11 +391,7 @@ def ext_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- embedding-cosine near-dup ----------------------------------------------
 
 # sign-LSH bucket over the first 8 dims (shared with ext_ann_lsh_bucketed)
-SPARK_BUCKET = (
-    "CAST(aggregate(sequence(1, 8), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) > 0"
-    " THEN CAST(pow(2, i - 1) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-)
+SPARK_BUCKET = sign_bucket_expr("embedding", 1, 8)
 SQL_BUCKET = (
     "CAST(list_sum(list_transform(generate_series(1, 8),"
     " i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0"
@@ -416,11 +414,7 @@ COSINE_DUP_THRESHOLD = 0.3  # candidate threshold; production near-dup ~0.95
 # data), so the DuckDB oracle computes the identical keys.
 EMB_BUCKET_CAP = 64
 
-_SPARK_SUBBUCKET = (
-    "CAST(aggregate(sequence(9, 16), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) > 0"
-    " THEN CAST(pow(2, i - 9) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-)
+_SPARK_SUBBUCKET = sign_bucket_expr("embedding", 9, 16)
 _SQL_SUBBUCKET = (
     "CAST(list_sum(list_transform(generate_series(9, 16),"
     " i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0"

@@ -25,7 +25,7 @@ that the suite did not yet cover:
   embedding-space centers by repeatedly taking the point farthest from
   the current center set, then report each center's selection radius
   and Voronoi cell size. Distances live on the shared 1e-12 integer
-  lattice (the ``SPARK_DOT`` discipline, commit fc3b048): per-term
+  lattice (``ext.embedding.SPARK_DOT_L``): per-term
   ``FLOOR(x*y*1e12 + 0.5)`` into a BIGINT accumulator makes every
   squared distance an exact, order-free integer in BOTH engines, so
   argmax/argmin decisions can never diverge on FP noise.
@@ -53,12 +53,14 @@ from marketing_etl_analytics_spark.ext.classifier import (
     PCTR_TRAIN_LT,
     PCTR_TRAIN_MOD,
 )
+from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT_L
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
     pround,
     sql_pround,
     t,
 )
+from marketing_etl_analytics_spark.suite.ext import embedding_index
 from marketing_etl_analytics_spark.suite.registry import register
 
 # --- UniMax budget allocation ------------------------------------------------
@@ -214,17 +216,10 @@ def ext_mix_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _K_CENTERS = 8
 
-# BIGINT integer-lattice dot product — the SPARK_DOT / SQL_DOT
-# discipline (suite/ext.py:480, commit fc3b048) kept IN lattice units:
-# per-term FLOOR(x*y*1e12 + 0.5) summed in a BIGINT accumulator.
-# Squared distances d2 = n2(a) + n2(b) - 2*dot(a,b) then stay exact,
-# order-free integers, so farthest/nearest decisions are identical in
+# DuckDB twin of ext.embedding.SPARK_DOT_L, kept IN lattice units so
+# squared distances d2 = n2(a) + n2(b) - 2*dot(a,b) stay exact,
+# order-free integers: farthest/nearest decisions are identical in
 # both engines by construction (no FP comparison anywhere).
-_SPARK_DOT_L = (
-    "aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-)
 _SQL_DOT_L = (
     "CAST(list_sum(list_transform(generate_series(1, len({a})),"
     " i -> CAST(FLOOR(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)"
@@ -299,25 +294,11 @@ def _kcenter_oracle(k: int) -> str:
 
 
 def _lattice_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, embedding, n2) with BIGINT lattice squared norms,
-    memoized — the stored-index shape: norms are computed at ingest,
-    every distance below reuses them."""
-
-    def build() -> DataFrame:
-        emb = t(spark, sf_dir, "embeddings")
-        return emb.select(
-            "vec_id",
-            "embedding",
-            F.expr(_SPARK_DOT_L.format(a="embedding", b="embedding"))
-            .alias("n2"),
-        )
-
-    return memo_df(spark, sf_dir, "emb_norms_lattice", build)
-
-
-def _d2_col(a_emb: str, a_n2: str, b_emb: str, b_n2: str) -> F.Column:
-    dot = F.expr(_SPARK_DOT_L.format(a=a_emb, b=b_emb))
-    return F.col(a_n2) + F.col(b_n2) - F.lit(2) * dot
+    """(vec_id, embedding, n2) with BIGINT lattice squared norms: the
+    shared vector index, whose norms every distance below reuses."""
+    return embedding_index(spark, sf_dir).select(
+        "vec_id", "embedding", F.col("n2l").alias("n2")
+    )
 
 
 def _kc_d2_lit(emb, n2: int) -> F.Column:
@@ -326,14 +307,9 @@ def _kc_d2_lit(emb, n2: int) -> F.Column:
     repr() is the shortest round-trip decimal, so the parsed double is
     bit-identical to the value the original CAST(element AS DOUBLE) of
     the float column produced — the per-term FLOOR lattice products
-    equal _d2_col's column×column form exactly."""
+    equal the column×column dot's exactly."""
     arr = ", ".join(f"{float(v)!r}D" for v in emb)
-    dot = (
-        "aggregate(sequence(1, size(embedding)), CAST(0 AS BIGINT),"
-        " (acc, i) -> acc + CAST(FLOOR(CAST(element_at(embedding, i)"
-        f" AS DOUBLE) * element_at(array({arr}), i) * 1e12 + 0.5)"
-        " AS BIGINT))"
-    )
+    dot = SPARK_DOT_L.format(a="embedding", b=f"array({arr})")
     return F.col("n2") + F.lit(int(n2)) - F.lit(2) * F.expr(dot)
 
 

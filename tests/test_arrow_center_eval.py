@@ -22,11 +22,10 @@ from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext import curation
 from marketing_etl_analytics_spark.ext.embedding import (
-    arrow_lattice_norms,
+    SPARK_DOT,
     arrow_min_center_dist,
     arrow_nearest_center,
 )
-from marketing_etl_analytics_spark.suite.ext import SPARK_DOT
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -53,20 +52,6 @@ def _centers(spark, n=16):
 
 def _rows_set(df):
     return {tuple(r) for r in df.collect()}
-
-
-def test_lattice_norms_bit_identical(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    jvm = emb.select(
-        "vec_id",
-        F.expr(SPARK_DOT.format(a="embedding", b="embedding")).alias("n2"),
-    )
-    arrow = arrow_lattice_norms(emb, "embedding", "n2").select("vec_id", "n2")
-    j = jvm.withColumnRenamed("n2", "n1").join(arrow, "vec_id")
-    assert j.count() == emb.count()
-    assert j.filter(F.col("n1") != F.col("n2")).count() == 0
 
 
 def test_nearest_center_matches_rank_window(spark):
@@ -201,7 +186,8 @@ def test_semantic_assign_ivf_kmeanspar_whole_path(spark, monkeypatch):
 
 @pytest.mark.parametrize("centers_max", [10**9, 0])
 def test_non_integral_key_rejected_on_both_paths(spark, monkeypatch, centers_max):
-    """A string key fails at the boundary with the key's name, whether
+    """A string key fails at the boundary with the key's name, and a
+    null vector fails the query with the vector column's name, whether
     the Arrow evaluators or the frame fallback would have run."""
     monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", centers_max)
     emb = spark.createDataFrame(
@@ -214,6 +200,18 @@ def test_non_integral_key_rejected_on_both_paths(spark, monkeypatch, centers_max
         curation.kmeanspar_seeds(
             emb.withColumn("_n2", F.lit(1.0)), "doc_key", "embedding", 2
         )
+    nulled = spark.createDataFrame(
+        [(i, None if i == 5 else [float(i % 3 + 1), 1.0, -1.0, 0.5])
+         for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    null_msg = "null vector in column 'embedding'"
+    with pytest.raises(Exception, match=null_msg):
+        curation.semantic_assign(nulled, n_centroids=2).collect()
+    with pytest.raises(Exception, match=null_msg):
+        curation.kmeanspar_seeds(
+            nulled.withColumn("_n2", F.lit(1.0)), "vec_id", "embedding", 2
+        ).collect()
 
 
 @pytest.fixture(scope="module")

@@ -14,8 +14,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from marketing_etl_analytics_spark.ext.embedding import arrow_lattice_dots
-from marketing_etl_analytics_spark.suite.ext import SPARK_DOT
+from marketing_etl_analytics_spark.ext.embedding import (
+    SPARK_DOT,
+    arrow_lattice_dots,
+)
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -15,6 +15,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.sources.sinks import write_bucketed_table
+
 SF_DIR = "/root/testdata/sf0.001"
 N_BUCKETS = 8
 
@@ -30,12 +32,7 @@ def bucketed(spark):
         (lineitem, "lineitem_b", "l_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(N_BUCKETS, key)
-            .sortBy(key)
-            .saveAsTable(name)
-        )
+        write_bucketed_table(df, name, [key], n_buckets=N_BUCKETS)
     yield spark
     for name in ("orders_b", "lineitem_b"):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
