@@ -12,4 +12,5 @@ from marketing_etl_analytics_spark.streaming.events_stream import (  # noqa: F40
     dedup_events,
     read_events_stream,
     sessionize,
+    sessionize_batch,
 )

@@ -11,13 +11,15 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StructField,
@@ -288,131 +290,271 @@ SESSION_SCHEMA = StructType(
     ]
 )
 
-STATE_SCHEMA = StructType(
+SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
+
+# Users per applyInPandasWithState group: the state store is keyed by
+# pmod(user_id, SESSION_BUCKETS), so the count is part of the
+# checkpoint's state layout and must not change under a running query
+# (see ``sessionize``).
+SESSION_BUCKETS = 64
+
+_LONGS = ArrayType(LongType(), containsNull=False)
+
+# One row per bucket: parallel arrays, one slot per user of the bucket
+# with an open session, sorted by user_id. close_ms is the user's
+# event-time timeout, fixed when the session was last extended.
+# user_id holds nulls only in the null-user bucket.
+BUCKET_STATE_SCHEMA = StructType(
     [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-        StructField("value", DoubleType()),
+        StructField("user_id", ArrayType(LongType())),
+        StructField("start_us", _LONGS),
+        StructField("last_us", _LONGS),
+        StructField("n", _LONGS),
+        StructField("cents", _LONGS),
+        StructField("close_ms", _LONGS),
     ]
 )
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
+
+def sessionize_batch(ev: DataFrame) -> DataFrame:
+    """Sessions by 30-min inactivity gap over (event_id, user_id, ts,
+    value) rows — the gaps-and-islands batch twin of ``sessionize``,
+    with the exact decimal(18,2) sum of ``value``."""
+    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order_w))
+    flagged = ev.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.when(gap_us.isNull() | (gap_us > SESSION_GAP_US), 1)
+        .otherwise(0)
+        .alias("new_session"),
+    )
+    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    numbered = flagged.withColumn("session_no", F.sum("new_session").over(run_w))
+    return (
+        numbered.groupBy("user_id", F.col("session_no").cast("long").alias("session_no"))
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
+            .cast("double")
+            .alias("total_value"),
+        )
+    )
 
 
-def _sessionize_user(
+def _bucket_events(
+    pdfs: Iterator[pd.DataFrame], null_users: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(user_id, ts micros, cents) of one bucket's rows in this call."""
+    uid, us, cents = [], [], []
+    for pdf in pdfs:
+        if null_users:
+            uid.append(np.zeros(len(pdf), np.int64))
+        else:
+            uid.append(pdf["user_id"].to_numpy(np.int64))
+        us.append(pdf["ts"].to_numpy("datetime64[us]").astype(np.int64))
+        cents.append(pdf["cents"].to_numpy(np.int64))
+    if not uid:
+        return tuple(np.empty(0, np.int64) for _ in range(3))
+    return np.concatenate(uid), np.concatenate(us), np.concatenate(cents)
+
+
+def _islands(
+    uid: np.ndarray,
+    start: np.ndarray,
+    last: np.ndarray,
+    n: np.ndarray,
+    cents: np.ndarray,
+) -> tuple[np.ndarray, ...]:
+    """Merge items (rows, or open sessions [start, last]) into
+    sessions, sorted by (user_id, start). Items of one user must be
+    disjoint, so a sorted item joins its predecessor's session iff it
+    is the same user's and starts within the gap of its last event."""
+    order = np.lexsort((start, uid))
+    uid, start, last = uid[order], start[order], last[order]
+    if not len(uid):
+        return uid, start, last, n[order], cents[order]
+    first = np.ones(len(uid), bool)
+    first[1:] = (uid[1:] != uid[:-1]) | (start[1:] - last[:-1] > SESSION_GAP_US)
+    seg = np.flatnonzero(first)
+    return (
+        uid[seg],
+        start[seg],
+        last[np.append(seg[1:] - 1, len(uid) - 1)],
+        np.add.reduceat(n[order], seg),
+        np.add.reduceat(cents[order], seg),
+    )
+
+
+def _sessionize_bucket(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Custom stateful operator: split one user's event stream into
-    sessions separated by >30 min of inactivity. Emits closed sessions;
-    keeps the open one in state (flushed on timeout)."""
-    (user_id,) = key
-    if state.hasTimedOut:
-        if state.exists:
-            start_us, last_us, n, value = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                    "total_value": [round(value, 2)],
-                }
-            )
-        return
+    """Sessionize every user of one bucket in one vectorized pass.
 
-    import numpy as np
+    Called for a bucket with rows in the micro-batch, or with none
+    when the bucket's timeout (its users' earliest close time) has
+    passed the watermark. Per user:
 
-    # vectorized gaps-and-islands: a Python per-event loop costs ~1 ms
-    # per group x thousands of groups per partition; numpy keeps the
-    # whole group batch in C
-    ts_parts, val_parts = [], []
-    for pdf in pdfs:
-        ts_parts.append(
-            pd.to_datetime(pdf["ts"]).values.astype("datetime64[us]").astype(np.int64)
-        )
-        val_parts.append(pdf["value"].to_numpy(dtype=np.float64))
-    us = np.concatenate(ts_parts) if ts_parts else np.empty(0, np.int64)
-    vals = np.concatenate(val_parts) if val_parts else np.empty(0, np.float64)
-    if len(us) == 0:
-        # empty non-timeout batch for this key: nothing to sessionize;
-        # re-arm the timeout so the open session still flushes
-        if state.exists:
-            _, last0, _, _ = state.get
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(last0 // 1000 + SESSION_GAP_US // 1000, wm + 1)
-            )
-        return
-    order = np.argsort(us, kind="stable")
-    us, vals = us[order], vals[order]
-
-    seg_starts = np.concatenate(
-        ([0], np.flatnonzero(np.diff(us) > SESSION_GAP_US) + 1)
-    )
-    seg_last = np.concatenate((seg_starts[1:] - 1, [len(us) - 1]))
-    counts = np.diff(np.concatenate((seg_starts, [len(us)])))
-    sums = np.add.reduceat(vals, seg_starts)
-    segments = [
-        (int(us[s]), int(us[e]), int(c), float(v))
-        for s, e, c, v in zip(seg_starts, seg_last, counts, sums)
-    ]
+    - with rows: the rows and the user's open session are merged into
+      gaps-and-islands sessions; all but the last are emitted, the
+      last stays open with close time max(last_ms + gap_ms, wm + 1);
+    - without rows: the open session is emitted if its close time is
+      below the watermark, else kept with its close time.
+    """
+    (bucket,) = key
+    null_users = pd.isna(bucket)  # pyspark passes the null key as NaN
+    wm = state.getCurrentWatermarkMs()
+    uid, us, cents = _bucket_events(pdfs, null_users)
 
     if state.exists:
-        # place the open session on the segment timeline and re-merge:
-        # an in-watermark out-of-order batch can sit entirely BEFORE
-        # the stored session (or straddle it), so pairwise in-gap
-        # merging over the sorted segment list is the correct general
-        # form — not a special case on the first batch segment
-        segments.append(tuple(state.get))
-        segments.sort()
-        merged = [segments[0]]
-        for seg in segments[1:]:
-            prev = merged[-1]
-            if seg[0] - prev[1] <= SESSION_GAP_US:
-                merged[-1] = (
-                    min(prev[0], seg[0]),
-                    max(prev[1], seg[1]),
-                    prev[2] + seg[2],
-                    prev[3] + seg[3],
-                )
-            else:
-                merged.append(seg)
-        segments = merged
+        cols = state.get
+        s_start, s_last, s_n, s_cents, s_close = (
+            np.asarray(c, np.int64) for c in cols[1:]
+        )
+        s_uid = (
+            np.zeros(len(s_start), np.int64)
+            if null_users
+            else np.asarray(cols[0], np.int64)
+        )
+    else:
+        s_uid = s_start = s_last = s_n = s_cents = s_close = np.empty(0, np.int64)
 
-    out = segments[:-1]
-    start_us, last_us, n, value = segments[-1]
-    state.update((start_us, last_us, n, value))
-    # event-time timeout: the open session closes when the watermark
-    # passes last_event + gap (no more in-gap events can arrive). A
-    # processing-time timeout would keep an availableNow run spinning
-    # empty "state cleanup" batches until wall-clock expiry.
-    timeout_ms = last_us // 1000 + SESSION_GAP_US // 1000
-    wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(max(timeout_ms, wm + 1))
-    if out:
+    touched = np.isin(s_uid, uid)
+    flush = ~touched & (s_close < wm)
+    keep = ~touched & ~flush
+
+    # a row inside its user's open session [start, last] joins it
+    # in place, which leaves every user's items disjoint for _islands
+    inside = np.zeros(len(uid), bool)
+    if len(s_uid):
+        pos = np.minimum(np.searchsorted(s_uid, uid), len(s_uid) - 1)
+        inside = (s_uid[pos] == uid) & (us >= s_start[pos]) & (us <= s_last[pos])
+        np.add.at(s_n, pos[inside], 1)
+        np.add.at(s_cents, pos[inside], cents[inside])
+    out = ~inside
+    i_uid = np.concatenate((uid[out], s_uid[touched]))
+    i_start = np.concatenate((us[out], s_start[touched]))
+    i_last = np.concatenate((us[out], s_last[touched]))
+    i_n = np.concatenate((np.ones(out.sum(), np.int64), s_n[touched]))
+    i_cents = np.concatenate((cents[out], s_cents[touched]))
+    g_uid, g_start, g_last, g_n, g_cents = _islands(
+        i_uid, i_start, i_last, i_n, i_cents
+    )
+    is_open = np.append(g_uid[1:] != g_uid[:-1], True)[: len(g_uid)]
+    g_close = np.maximum(g_last[is_open] // 1000 + SESSION_GAP_US // 1000, wm + 1)
+
+    # the new state: kept users plus each touched user's last session
+    n_uid = np.concatenate((s_uid[keep], g_uid[is_open]))
+    if len(n_uid):
+        by_user = np.argsort(n_uid, kind="stable")
+        n_close = np.concatenate((s_close[keep], g_close))[by_user]
+        state.update(
+            (
+                [None] * len(n_uid) if null_users else n_uid[by_user].tolist(),
+                np.concatenate((s_start[keep], g_start[is_open]))[by_user].tolist(),
+                np.concatenate((s_last[keep], g_last[is_open]))[by_user].tolist(),
+                np.concatenate((s_n[keep], g_n[is_open]))[by_user].tolist(),
+                np.concatenate((s_cents[keep], g_cents[is_open]))[by_user].tolist(),
+                n_close.tolist(),
+            )
+        )
+        # event-time timeout: a processing-time one would keep an
+        # availableNow run spinning empty batches until wall-clock
+        # expiry
+        state.setTimeoutTimestamp(int(n_close.min()))
+    elif state.exists:
+        state.remove()
+
+    closed = ~is_open
+    if closed.any() or flush.any():
+        uid = np.concatenate((g_uid[closed], s_uid[flush]))
         yield pd.DataFrame(
             {
-                "user_id": [user_id] * len(out),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _, _ in out],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _, _ in out],
-                "n_events": [n_ for _, _, n_, _ in out],
-                "total_value": [round(v_, 2) for _, _, _, v_ in out],
+                "user_id": [None] * len(uid) if null_users else uid,
+                "session_start": pd.to_datetime(
+                    np.concatenate((g_start[closed], s_start[flush])), unit="us"
+                ),
+                "session_end": pd.to_datetime(
+                    np.concatenate((g_last[closed], s_last[flush])), unit="us"
+                ),
+                "n_events": np.concatenate((g_n[closed], s_n[flush])),
+                "total_value": np.concatenate((g_cents[closed], s_cents[flush])) / 100,
             }
         )
 
 
 def sessionize(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """30-min-gap sessionization via applyInPandasWithState — the
-    custom-stateful-operator pattern Spark's built-ins can't express."""
+    """30-min-gap sessionization via applyInPandasWithState.
+
+    Emission contract (append mode). A session is the run of one
+    user's events with no gap over ``SESSION_GAP_US``; it is emitted
+    once, as (user_id, first ts, last ts, n_events, total_value), when
+    it closes:
+
+    - gap-closed: the micro-batch that brings a later event of the
+      same user more than the gap after the session's last event
+      emits it at once;
+    - timed out: the user's last session closes at
+      ``max(last_ms + gap_ms, wm + 1)`` (``wm`` the watermark when
+      the session was last extended) and is emitted in the first
+      micro-batch whose watermark is strictly above that time.
+
+    Late rows within the watermark are merged into the user's open
+    session, before it or across it. At the end of a bounded run the
+    sessions not yet timed out stay in state. Under ``availableNow``
+    over one file (one data batch, then one batch at the final
+    watermark ``max_ms - 2 h``) the output is every gaps-and-islands
+    session except each user's last one when
+    ``floor(last_us / 1000) + gap_ms >= wm``, the rule the
+    ``stream_sessionize`` oracle states in SQL. ``total_value`` is the
+    exact sum of ``value`` as decimal(18,2) (carried as integer cents;
+    a null value adds nothing), the same figure as ``sessionize_batch``.
+
+    Native ``session_window`` does not meet this contract: in append
+    mode it emits a session only once the watermark passes its end,
+    so a session already closed by a later in-stream gap but still
+    inside the watermark horizon stays in state (95,145 rows against
+    these 95,163 at sf0.1).
+
+    Buckets. The operator groups by ``pmod(user_id,
+    SESSION_BUCKETS)``, so a micro-batch costs one Python call per
+    bucket instead of one per user, each a vectorized pass over many
+    users' rows (``_sessionize_bucket``); a null user_id is its own
+    user in the null bucket. Only (bucket, user_id, ts, cents) cross
+    the Arrow boundary. The count is a constant, not derived from
+    ``spark.sql.shuffle.partitions``: the state store is keyed by
+    bucket, so a query restarted from its checkpoint under another
+    bucket count would look users up in the wrong state rows. The
+    cost: a bucket with rows in a batch rewrites its whole state row,
+    O(its open users), once per batch, and the operator never runs
+    more than ``SESSION_BUCKETS`` tasks with data at once.
+
+    Sweep at sf0.1 (1,500 users, 100,000 events, 4 cores, 4 state
+    stores, 2 micro-batches), ``stream_sessionize`` wall time, median
+    of 6 interleaved warm runs: per user 7.28 s; 16 buckets 3.67 s,
+    32 3.74 s, 64 3.75 s, 128 3.89 s, 256 4.11 s. 16 to 64 tie within
+    the run-to-run spread (3.0-5.3 s); 64 is the largest count in the
+    tie, so it keeps the most parallelism and the smallest state rows.
+    """
     return (
         events.withWatermark("ts", watermark)
-        .groupBy("user_id")
+        .select(
+            F.pmod(F.col("user_id"), F.lit(SESSION_BUCKETS)).alias("bucket"),
+            "user_id",
+            "ts",
+            F.coalesce(
+                (F.col("value").cast("decimal(18,2)") * 100).cast("long"), F.lit(0)
+            ).alias("cents"),
+        )
+        .groupBy("bucket")
         .applyInPandasWithState(
-            _sessionize_user,
+            _sessionize_bucket,
             outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
+            stateStructType=BUCKET_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

@@ -2,9 +2,9 @@
 
 Completes the dedup family (SimHash), the embedding near-dup path
 (cosine over LSH buckets), and the ANN scale path (IVF with
-deterministic centroid seeding), plus batch sessionization
-(gaps-and-islands — the batch twin of streaming.sessionize) and
-corpus n-gram statistics.
+deterministic centroid seeding), plus the batch sessionization entry
+(``streaming.sessionize_batch``, the gaps-and-islands twin of
+``streaming.sessionize``) and corpus n-gram statistics.
 
 Scale shapes:
 - SimHash: per-token hashing then the 48×tokens bit-vote are per-row
@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
-    money,
     pround,
     ratio,
     sql_pround,
@@ -47,6 +46,10 @@ from marketing_etl_analytics_spark.suite.common import (
 from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets
 from marketing_etl_analytics_spark.ext.embedding import SPARK_DOT
 from marketing_etl_analytics_spark.ext.similarity import sign_bucket_expr
+from marketing_etl_analytics_spark.streaming.events_stream import (
+    SESSION_GAP_US,
+    sessionize_batch,
+)
 from marketing_etl_analytics_spark.suite.ext import (
     SQL_DOT,
     embedding_norms,
@@ -986,9 +989,6 @@ def ext_ann_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- batch sessionization (gaps-and-islands) ---------------------------------
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matches streaming.sessionize
-
-
 @register(
     "ext_sessionize",
     f"""
@@ -1028,34 +1028,6 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matches streaming.sessionize
 def ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     return sessionize_batch(ev).orderBy("user_id", "session_no")
-
-
-def sessionize_batch(ev: DataFrame) -> DataFrame:
-    """Sessions by 30-min inactivity gap over (event_id, user_id, ts,
-    value) rows — the gaps-and-islands batch twin of
-    streaming.sessionize."""
-    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order_w))
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(gap_us.isNull() | (gap_us > SESSION_GAP_US), 1)
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    numbered = flagged.withColumn("session_no", F.sum("new_session").over(run_w))
-    return (
-        numbered.groupBy("user_id", F.col("session_no").cast("long").alias("session_no"))
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
-        )
-    )
 
 
 # --- corpus text statistics: TF-IDF + n-gram top-k ---------------------------

@@ -50,6 +50,7 @@ from marketing_etl_analytics_spark.ext.sketches import (
     hll_merge,
     hll_registers,
 )
+from marketing_etl_analytics_spark.streaming.events_stream import SESSION_GAP_US
 from marketing_etl_analytics_spark.suite.common import money, pround, sql_pround, t
 from marketing_etl_analytics_spark.suite.registry import register
 
@@ -564,9 +565,6 @@ def ext_dau_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- native session windows --------------------------------------------------
 
-_SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
 @register(
     "ext_session_window_native",
     f"""
@@ -582,7 +580,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
         -- pinned by test_session_window_boundary_is_inclusive), the
         -- same rule as the gaps-and-islands twin
         CASE WHEN prev_ts IS NULL
-                  OR epoch_us(ts) - epoch_us(prev_ts) > {_SESSION_GAP_US}
+                  OR epoch_us(ts) - epoch_us(prev_ts) > {SESSION_GAP_US}
              THEN 1 ELSE 0 END AS new_session
       FROM ordered
     ),

@@ -14,11 +14,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from marketing_etl_analytics_spark.suite.ext_scale import (
+from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
+    sessionize_batch,
+)
+from marketing_etl_analytics_spark.suite.ext_scale import (
     ext_ann_cosine_for_ivf_check,
     ext_dedup_simhash_frame,
-    sessionize_batch,
 )
 
 

@@ -12,11 +12,11 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from marketing_etl_analytics_spark.suite.ext_scale import (
+from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
     sessionize_batch,
-    simhash_fingerprints,
 )
+from marketing_etl_analytics_spark.suite.ext_scale import simhash_fingerprints
 
 _ts_offsets = st.lists(
     st.integers(min_value=0, max_value=6 * 60 * 60), min_size=1, max_size=12
